@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from trino_iceberg_spark.client import AthenaSparkClient
 from trino_iceberg_spark.catalog.snapshots import SnapshotTable
-from trino_iceberg_spark.errors import QueryError
+from trino_iceberg_spark.errors import EngineError, QueryError
 from trino_iceberg_spark.timetravel_sql import (
     SnapshotResolver,
     parse_ts_literal,
@@ -107,12 +107,8 @@ def test_unknown_table_raises(spark):
 
 
 def test_clause_inside_string_literal_untouched(spark):
-    out = rewrite_time_travel(
-        spark,
-        "SELECT 'x FOR TIMESTAMP AS OF TIMESTAMP ''2024-01-01''' AS s",
-        SnapshotResolver(),
-    )
-    assert "__tt_" not in out
+    sql = "SELECT 'x FOR TIMESTAMP AS OF TIMESTAMP ''2024-01-01''' AS s"
+    assert rewrite_time_travel(spark, sql, SnapshotResolver()) == sql
 
 
 def test_warehouse_convention_resolution(spark, tmp_path):
@@ -1066,7 +1062,7 @@ def test_unsupported_statement_guard_and_tblproperties_alias(spark, tmp_path):
     )
     assert t.table_properties()["write.delete.mode"] == "merge-on-read"
 
-    # arbitrary unsupported ALTER spellings: clear refusal, no __cur_*
+    # arbitrary unsupported ALTER spellings: clear refusal, no __snap_*
     # leak, table intact
     for bad in (
         "ALTER TABLE guard_t ADD COLUMNS (x int, y int)",
@@ -1078,7 +1074,7 @@ def test_unsupported_statement_guard_and_tblproperties_alias(spark, tmp_path):
             client.execute(bad)
         msg = str(ei.value)
         assert "unsupported statement for snapshot table" in msg
-        assert "__cur" not in msg
+        assert "__snap" not in msg
     assert client.query_scalar("SELECT COUNT(*) FROM guard_t") == 3
     # unregistered tables keep falling through to Spark untouched
     spark.sql("CREATE TABLE IF NOT EXISTS guard_plain (a INT) USING parquet")
@@ -2054,3 +2050,227 @@ def test_partition_spec_evolution_sql_verbs(spark, tmp_path):
         "Create Table"
     ]
     assert client.query_scalar("SELECT COUNT(*) FROM spe.a") == 40
+
+
+# -- snapshot views: one memoized temp view per immutable snapshot ----------
+
+
+def _ids(spark, ids):
+    return spark.createDataFrame([(int(i),) for i in ids], "id long")
+
+
+def _temp_views(session):
+    return sorted(t.name for t in session.catalog.listTables() if t.isTemporary)
+
+
+def _snap_client(spark, tmp_path, name, ids=(1, 2, 3)):
+    """A one-commit snapshot table ``name`` and a client on a fresh
+    session, whose temp views are then only the ones this client made."""
+    tdir = str(tmp_path / name)
+    table = SnapshotTable(spark, tdir)
+    table.append(_ids(spark, ids))
+    session = spark.newSession()
+    client = AthenaSparkClient(session)
+    client.register_snapshot_table(name, tdir)
+    return client, table, session
+
+
+def test_bare_read_sees_commit_made_through_client(spark, tmp_path):
+    client, _, session = _snap_client(spark, tmp_path, "sv_cli")
+    assert client.query_scalar("SELECT COUNT(*) FROM sv_cli") == 3
+    assert client.query_scalar("SELECT COUNT(*) FROM sv_cli") == 3
+    client.execute("INSERT INTO sv_cli VALUES (4)")
+    assert client.query_scalar("SELECT SUM(id) FROM sv_cli") == 10
+    assert len(_temp_views(session)) == 2  # one per snapshot read
+
+
+def test_bare_read_sees_commit_made_through_other_handle(spark, tmp_path):
+    client, table, _ = _snap_client(spark, tmp_path, "sv_ext")
+    assert client.query_scalar("SELECT COUNT(*) FROM sv_ext") == 3
+    SnapshotTable(spark, table.table_dir).append(_ids(spark, [9]))
+    assert client.query_scalar("SELECT MAX(id) FROM sv_ext") == 9
+    assert client.query_scalar("SELECT COUNT(*) FROM sv_ext FOR VERSION AS OF 1") == 3
+
+
+def test_drop_and_recreate_at_same_dir_reads_no_stale_rows(spark, tmp_path):
+    """Snapshot ids restart at 1 in a table re-created at the same
+    directory: neither the bare name nor VERSION AS OF 1 may be served
+    from a view of the dropped table."""
+    import shutil
+
+    client, table, session = _snap_client(spark, tmp_path, "sv_drop")
+    assert client.query_scalar("SELECT SUM(id) FROM sv_drop") == 6
+    assert client.query_scalar("SELECT SUM(id) FROM sv_drop FOR VERSION AS OF 1") == 6
+    assert len(_temp_views(session)) == 1
+    client.execute("DROP TABLE sv_drop")
+    assert _temp_views(session) == []  # evicted with the directory
+    SnapshotTable(spark, table.table_dir).append(_ids(spark, [7, 8]))
+    client.register_snapshot_table("sv_drop", table.table_dir)
+    assert client.query_scalar("SELECT SUM(id) FROM sv_drop") == 15
+    assert client.query_scalar("SELECT SUM(id) FROM sv_drop FOR VERSION AS OF 1") == 15
+    # dropped behind the client's back: the commit time tells the two
+    # snapshot 1s apart
+    shutil.rmtree(table.table_dir)
+    SnapshotTable(spark, table.table_dir).append(_ids(spark, [40]))
+    assert client.query_scalar("SELECT SUM(id) FROM sv_drop") == 40
+    assert client.query_scalar("SELECT SUM(id) FROM sv_drop FOR VERSION AS OF 1") == 40
+    assert len(_temp_views(session)) == 1
+
+
+def test_rollback_expire_and_reused_snapshot_id(spark, tmp_path):
+    """v3 lives on a branch that is rolled back, dropped and expired; the
+    next main commit takes id 3 again and must read as itself."""
+    client, t, session = _snap_client(spark, tmp_path, "sv_reuse", ids=[1])
+    t.append(_ids(spark, [2]))  # v2, main head
+    t.create_branch("b")
+    t.append(_ids(spark, [3]), branch="b")  # v3
+    t.rollback_to(1, branch="b")  # v4
+    q = "SELECT SUM(id) FROM sv_reuse FOR VERSION AS OF {0}"
+    assert client.query_scalar(q, 3) == 6
+    assert client.query_scalar("SELECT SUM(id) FROM sv_reuse FOR VERSION AS OF 'b'") == 1
+    assert client.query_scalar("SELECT SUM(id) FROM sv_reuse") == 3
+    t.drop_ref("b")
+    assert t.expire_snapshots(retain_last=0) == 3  # v1, v3, v4
+    assert t.append(_ids(spark, [10])).snapshot_id == 3
+    assert client.query_scalar(q, 3) == 13
+    assert client.query_scalar("SELECT SUM(id) FROM sv_reuse") == 13
+    with pytest.raises(EngineError, match="snapshot 4 not found"):
+        client.query_scalar(q, 4)
+    # the miss on the new v3 swept the views of the old v3 (replaced) and
+    # v4 (expired); those of v2 and the new v3 remain
+    assert len(_temp_views(session)) == 2
+
+
+def test_bare_read_with_merge_on_read_deletes(spark, tmp_path):
+    client, t, _ = _snap_client(spark, tmp_path, "sv_mor", ids=range(6))
+    t.set_table_property("write.delete.mode", "merge-on-read")
+    client.execute("DELETE FROM sv_mor WHERE id = 2")
+    assert t.current_snapshot().position_deletes
+    for _ in range(2):
+        assert client.query_scalar("SELECT SUM(id) FROM sv_mor") == 13
+    client.execute("DELETE FROM sv_mor WHERE id = 4")
+    assert client.query_scalar("SELECT COUNT(*) FROM sv_mor") == 4
+    assert client.query_scalar("SELECT SUM(id) FROM sv_mor FOR VERSION AS OF 2") == 13
+
+
+def test_snapshot_views_are_per_session(spark, tmp_path):
+    client, t, session = _snap_client(spark, tmp_path, "sv_sess")
+    other = AthenaSparkClient(spark)
+    other.register_snapshot_table("sv_sess", t.table_dir)
+    assert other.query_scalar("SELECT COUNT(*) FROM sv_sess") == 3
+    assert _temp_views(session) == []  # the other session's view is not ours
+    assert client.query_scalar("SELECT COUNT(*) FROM sv_sess") == 3
+    assert len(_temp_views(session)) == 1
+
+
+def test_concurrent_reads_build_each_view_once(spark, tmp_path):
+    """More threads than cores race on the first read of one snapshot
+    (with a short switch interval): the view is built once."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    client, _, session = _snap_client(spark, tmp_path, "sv_conc", ids=range(8))
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        client.execute_batch(
+            [f"SELECT COUNT(*) FROM sv_conc WHERE id >= {i}" for i in range(8)],
+            concurrency=8,
+        )
+        assert len(_temp_views(session)) == 1
+        client.execute("INSERT INTO sv_conc VALUES (100)")
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            futures = [
+                pool.submit(
+                    client.query_scalar,
+                    "SELECT COUNT(*) FROM sv_conc WHERE id >= {0}", i,
+                )
+                for i in range(8)
+            ]
+            got = [f.result(timeout=120) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert got == [9 - i for i in range(8)]
+    assert len(_temp_views(session)) == 2
+
+
+def test_mixed_calls_leave_one_view_per_snapshot_read(spark, tmp_path):
+    """50 calls mixing bare, VERSION AS OF id, TIMESTAMP AS OF, VERSION
+    AS OF 'ref' and $snapshots over four snapshots: one temp view per
+    snapshot read, and no per-call view left behind."""
+    client, t, session = _snap_client(spark, tmp_path, "sv_mix", ids=[0])
+    snaps = [t.current_snapshot()]
+    snaps += [t.append(_ids(spark, [i])) for i in (1, 2)]
+    t.create_tag("first", 1)
+    read: set[int] = set()
+    for i in range(50):
+        if i == 25:
+            snaps.append(t.append(_ids(spark, [3])))
+        sn = snaps[i % len(snaps)]
+        kind = i % 5
+        if kind == 0:
+            sql, sid = "SELECT COUNT(*) FROM sv_mix", snaps[-1].snapshot_id
+        elif kind == 1:
+            sql = f"SELECT COUNT(*) FROM sv_mix FOR VERSION AS OF {sn.snapshot_id}"
+            sid = sn.snapshot_id
+        elif kind == 2:
+            lit = sn.committed_at.strftime("%Y-%m-%d %H:%M:%S.%f")
+            sql = f"SELECT COUNT(*) FROM sv_mix FOR TIMESTAMP AS OF TIMESTAMP '{lit}'"
+            sid = sn.snapshot_id
+        elif kind == 3:
+            sql, sid = "SELECT COUNT(*) FROM sv_mix FOR VERSION AS OF 'first'", 1
+        else:
+            sql, sid = "SELECT COUNT(*) FROM sv_mix$snapshots", None
+        want = len(snaps) if sid is None else sid
+        assert client.query_scalar(sql) == want, sql
+        if sid is not None:
+            read.add(sid)
+    views = _temp_views(session)
+    assert len(views) == len(read) == 4
+    assert all(v.startswith("__snap_sv_mix_") for v in views)
+
+
+def test_second_read_of_a_snapshot_runs_one_job_fewer(spark, tmp_path):
+    """The first read of a snapshot pays the parquet schema job; the
+    second reuses the snapshot's view and runs only the query's jobs."""
+    import uuid
+
+    client, _, _ = _snap_client(spark, tmp_path, "sv_jobs", ids=range(10))
+    sc = spark.sparkContext
+    jobs = []
+    for _ in range(2):
+        gid = f"sv_jobs_{uuid.uuid4().hex}"
+        sc.setJobGroup(gid, gid)
+        try:
+            assert client.query_scalar("SELECT COUNT(*) FROM sv_jobs WHERE id > 4") == 5
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(gid)))
+    assert jobs[1] == jobs[0] - 1, jobs
+
+
+def test_metadata_views_dropped_after_analysis(spark, tmp_path):
+    """A $metadata relation's per-call view is dropped once the statement
+    is analyzed (after the QUALIFY retry too); the returned DataFrame
+    still runs. A temp view defined over one keeps it: Spark stores the
+    definition as SQL text and resolves it again on use."""
+    client, t, session = _snap_client(spark, tmp_path, "sv_meta")
+    t.append(_ids(spark, [4]))
+    df = client.sql_df("SELECT snapshot_id FROM sv_meta$snapshots")
+    assert _temp_views(session) == []
+    assert sorted(r.snapshot_id for r in df.collect()) == [1, 2]
+    assert df.first() is not None
+    assert [r.snapshot_id for r in client.iter_query(
+        "SELECT snapshot_id FROM sv_meta$history ORDER BY snapshot_id")] == [1, 2]
+    q = client.query(
+        "SELECT snapshot_id FROM sv_meta$snapshots "
+        "QUALIFY row_number() OVER (ORDER BY snapshot_id DESC) = 1"
+    )
+    assert [r.snapshot_id for r in q] == [2]
+    assert _temp_views(session) == []
+    client.execute(
+        "CREATE TEMP VIEW sv_meta_ops AS SELECT operation FROM sv_meta$snapshots"
+    )
+    assert client.query_scalar("SELECT COUNT(*) FROM sv_meta_ops") == 2

@@ -274,9 +274,14 @@ class SnapshotTable:
         # read — this sits inside the commit critical section via
         # _branch_head, where an O(all-manifests) scan would make
         # lock-hold time grow with table history.
+        return self._resolve_snapshot(self._snapshot_header(snapshot_id))
+
+    def _snapshot_header(self, snapshot_id: int) -> dict:
+        """Manifest dict of one snapshot id, segments unresolved: one
+        small-JSON read (see :meth:`_snapshot_by_id` on the naming)."""
         p = os.path.join(self.metadata_dir, f"v{snapshot_id}.json")
         if os.path.isfile(p):
-            return self._load_manifest(p)
+            return self._load_manifest_header(p)
         raise EngineError(f"snapshot {snapshot_id} not found in {self.table_dir}")
 
     def _branch_head(self, branch: str) -> Snapshot | None:
@@ -346,13 +351,28 @@ class SnapshotTable:
 
     def read_ref(self, name: str) -> DataFrame:
         """Read a branch head or tag by name (``main`` always works)."""
+        return self._read_snapshot(self._snapshot_by_id(self.ref_snapshot_id(name)))
+
+    def ref_snapshot_id(self, name: str) -> int:
+        """Snapshot id a tag or branch head points at, from the refs file
+        alone (no manifest is parsed)."""
         refs = self._load_refs()
         if name in refs["tags"]:
-            return self._read_snapshot(self._snapshot_by_id(refs["tags"][name]))
-        head = self._branch_head(name)
+            return refs["tags"][name]
+        if name == "main":
+            head = self._main_head_id_fast(refs)
+        elif name in refs["branches"]:
+            head = refs["branches"][name]
+        else:
+            raise EngineError(f"branch {name!r} not found in {self.table_dir}")
         if head is None:
             raise EngineError(f"table {self.table_dir} has no snapshots")
-        return self._read_snapshot(head)
+        return head
+
+    def current_snapshot_id(self) -> int | None:
+        """Id of :meth:`current_snapshot` (the ``main`` head) from the refs
+        file alone; None on an empty table."""
+        return self._main_head_id_fast(self._load_refs())
 
     def _main_head_id_fast(self, refs: dict) -> int | None:
         """Head SNAPSHOT ID of ``main`` given already-loaded refs, without
@@ -3339,25 +3359,46 @@ class SnapshotTable:
         manifests without a recorded parent fall back to the id-ordered
         prefix (the chain was linear before branch support); an expired
         parent ends the walk."""
-        head = self._branch_head("main")
-        if head is None:
+        return [self._resolve_snapshot(h) for h in self._main_ancestry_headers()]
+
+    def _main_ancestry_headers(self) -> list[dict]:
+        """:meth:`main_ancestry` as manifest headers: one small-JSON read
+        per snapshot on the chain, no segment resolved."""
+        head_id = self.current_snapshot_id()
+        if head_id is None:
             return []
-        snaps = self.snapshots()
-        by_id = {s.snapshot_id: s for s in snaps}
-        chain: list[Snapshot] = []
-        cur: Snapshot | None = head
+        chain: list[dict] = []
+        cur: dict | None = self._snapshot_header(head_id)
         while cur is not None:
             chain.append(cur)
-            pid = cur.parent_snapshot_id
+            pid = cur.get("parent_snapshot_id")
             if pid is None:  # legacy manifest: linear history below it
                 chain.extend(
-                    s for s in reversed(snaps) if s.snapshot_id < cur.snapshot_id
+                    self._load_manifest_header(p)
+                    for p in reversed(self._manifest_paths())
+                    if int(os.path.basename(p)[1:-5]) < cur["snapshot_id"]
                 )
                 break
             if pid == 0:  # root commit
                 break
-            cur = by_id.get(pid)  # expired parent → stop
-        return list(reversed(chain))
+            p = os.path.join(self.metadata_dir, f"v{pid}.json")
+            cur = self._load_manifest_header(p) if os.path.isfile(p) else None
+        return list(reversed(chain))  # an expired parent ended the walk
+
+    def snapshot_id_as_of(self, ts: dt.datetime) -> int:
+        """Id of the latest MAIN-ANCESTRY snapshot committed ≤ ts — the
+        snapshot ``FOR TIMESTAMP AS OF`` reads, from manifest headers
+        alone."""
+        ts_us = int(ts.replace(tzinfo=ts.tzinfo or dt.timezone.utc).timestamp() * 1e6)
+        chosen = None
+        for hdr in self._main_ancestry_headers():
+            if hdr["committed_at_us"] <= ts_us:
+                chosen = hdr["snapshot_id"]
+        if chosen is None:
+            raise EngineError(
+                f"no snapshot of {self.table_dir} at or before {ts.isoformat()}"
+            )
+        return chosen
 
     def read_as_of(self, ts: dt.datetime) -> DataFrame:
         """``FOR TIMESTAMP AS OF`` (B18): latest MAIN-ANCESTRY snapshot
@@ -3365,26 +3406,14 @@ class SnapshotTable:
         predicates by just chaining .filter on the returned DataFrame).
         Unpublished write-audit-publish branch commits are invisible to
         timestamp travel until published, matching read() isolation."""
-        ts_us = int(ts.replace(tzinfo=ts.tzinfo or dt.timezone.utc).timestamp() * 1e6)
-        chosen = None
-        for snap in self.main_ancestry():
-            if snap.committed_at_us <= ts_us:
-                chosen = snap
-        if chosen is None:
-            raise EngineError(
-                f"no snapshot of {self.table_dir} at or before {ts.isoformat()}"
-            )
-        return self._read_snapshot(chosen)
+        return self._read_snapshot(self._snapshot_by_id(self.snapshot_id_as_of(ts)))
 
     def read_version(self, snapshot_id: int) -> DataFrame:
         """``VERSION AS OF`` — read an exact snapshot id (under that
         snapshot's schema). Id-addressed like Iceberg: any snapshot in the
         table metadata is readable by explicit id, including branch
         commits; only TIMESTAMP travel is ancestry-restricted."""
-        for snap in self.snapshots():
-            if snap.snapshot_id == snapshot_id:
-                return self._read_snapshot(snap)
-        raise EngineError(f"snapshot {snapshot_id} not found in {self.table_dir}")
+        return self._read_snapshot(self._snapshot_by_id(snapshot_id))
 
     def _mor_newly_dead_rows(
         self, before: Snapshot, after: Snapshot

@@ -110,6 +110,11 @@ class AthenaSparkClient:
         re.IGNORECASE,
     )
 
+    _DEFINES_VIEW_RE = re.compile(
+        r"^\s*(?:CREATE\b[^(]*?\bVIEW\b|ALTER\s+VIEW\b|CACHE\s+(?:LAZY\s+)?TABLE\b)",
+        re.IGNORECASE,
+    )
+
     # -- core ------------------------------------------------------------
     def sql_df(self, sql: str, *params: Any) -> DataFrame:
         """Render params and hand the statement to Catalyst (lazy)."""
@@ -214,7 +219,8 @@ class AthenaSparkClient:
             # rewritten form is a Spark parse error today, so the rewrite
             # is purely enabling; gated on a cheap keyword probe
             rendered = rewrite_trino_limits(rendered)
-        rendered = rewrite_time_travel(self.spark, rendered, self.snapshots)
+        transient: list[str] = []
+        rendered = rewrite_time_travel(self.spark, rendered, self.snapshots, transient)
         try:
             return self.spark.sql(rendered)
         except AnalysisException as exc:  # ParseException is a subclass
@@ -251,6 +257,13 @@ class AthenaSparkClient:
             # datasource. First line of the Java message, full statement.
             msg = str(getattr(exc, "java_exception", exc))
             raise QueryError(msg.split("\n\tat ")[0], sql=rendered) from exc
+        finally:
+            # The returned DataFrame is analyzed, so the per-call
+            # $metadata views can go — unless the statement defines a
+            # view, which Spark stores as SQL text and re-resolves on use.
+            if transient and not self._DEFINES_VIEW_RE.match(rendered):
+                for view in transient:
+                    self.spark.catalog.dropTempView(view)
 
     def query(self, sql: str, *params: Any) -> list[Row]:
         """A1 minus the DTO step: run SQL, materialize rows."""
@@ -906,6 +919,8 @@ class AthenaSparkClient:
             self.snapshots.unregister(dm_.group("tbl"))
             if table is not None:
                 shutil.rmtree(table.table_dir, ignore_errors=True)
+                # no view may outlive the files it reads
+                self.snapshots.evict(table.table_dir)
             return 0
         tm_ = self._SNAP_TRUNCATE_RE.match(rendered)
         if tm_ is not None:

@@ -18,19 +18,26 @@ the client rewrites the clause *before* handing the text to Catalyst:
    <n>`` (the Athena form) or ``<table> TIMESTAMP AS OF <ts>`` /
    ``VERSION AS OF <n>`` (the Spark/Iceberg form — accepted too so either
    dialect's query strings run), resolve the table to a
-   :class:`~trino_iceberg_spark.catalog.snapshots.SnapshotTable`, read the
-   requested snapshot, and register the result as a unique temp view;
+   :class:`~trino_iceberg_spark.catalog.snapshots.SnapshotTable`, find
+   the requested snapshot id from metadata alone, and look up that
+   snapshot's temp view (:meth:`SnapshotResolver.snapshot_view`);
 3. splice the view name into the SQL where the table+clause stood.
 
 Everything after the rewrite is ordinary Catalyst planning — WHERE /
 ORDER BY / joins around the clause compose untouched, and the snapshot
 read is still a plain parquet scan (pushdown and pruning intact).
+
+A snapshot never changes once committed, so its view is built once per
+session: the first read pays the parquet footer/schema job, later reads
+of the same snapshot cost one manifest-header read.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import os
 import re
+import threading
 import uuid
 
 from pyspark.sql import SparkSession
@@ -100,11 +107,21 @@ class SnapshotResolver:
 
     Explicit registrations win; otherwise a warehouse-dir convention is
     tried: ``<warehouse>/<part>/<part>/...`` (dotted names become nested
-    dirs) holding a ``metadata/`` manifest dir."""
+    dirs) holding a ``metadata/`` manifest dir.
+
+    The resolver also owns the temp views that snapshot reads are served
+    from (:meth:`snapshot_view`); clients that share a resolver share
+    them."""
 
     def __init__(self, warehouse_dir: str | None = None):
         self.warehouse_dir = warehouse_dir
         self._tables: dict[str, str] = {}
+        # (session uuid, table dir, snapshot id) → (committed_at_us, view
+        # name, session). The commit time tells a snapshot apart from a
+        # later one that reuses its id: ids restart after DROP/CREATE at
+        # the same dir, and the newest id is reused after it expires.
+        self._views: dict[tuple[str, str, int], tuple[int, str, SparkSession]] = {}
+        self._views_lock = threading.Lock()
 
     def register(self, name: str, table_dir: str) -> None:
         self._tables[name.lower()] = table_dir
@@ -129,8 +146,6 @@ class SnapshotResolver:
         return list(self._tables)
 
     def resolve(self, spark: SparkSession, name: str) -> SnapshotTable | None:
-        import os
-
         key = name.lower()
         if key in self._tables:
             return SnapshotTable(spark, self._tables[key])
@@ -145,16 +160,75 @@ class SnapshotResolver:
                 return SnapshotTable(spark, cand)
         return None
 
+    def snapshot_view(
+        self, spark: SparkSession, table: SnapshotTable, snapshot_id: int
+    ) -> str:
+        """Name of a temp view in ``spark`` over snapshot ``snapshot_id``
+        of ``table``, built on first use and reused after that. A hit costs
+        one manifest-header read and runs no Spark job; a miss reads the
+        snapshot (parquet footer/schema job) under a lock, so concurrent
+        callers build each view once, and first evicts this table's
+        entries whose manifest is gone or was replaced."""
+        key = (spark._jsparkSession.sessionUUID(), table.table_dir, snapshot_id)
+        hdr = table._snapshot_header(snapshot_id)
+        committed = hdr["committed_at_us"]
+        hit = self._views.get(key)
+        if hit is None or hit[0] != committed:
+            with self._views_lock:
+                hit = self._views.get(key)
+                if hit is None or hit[0] != committed:
+                    self._sweep(table.table_dir)
+                    base = re.sub(r"\W", "_", os.path.basename(table.table_dir))
+                    view = f"__snap_{base}_{snapshot_id}_{uuid.uuid4().hex[:8]}"
+                    df = table._read_snapshot(table._resolve_snapshot(hdr))
+                    df.createOrReplaceTempView(view)
+                    hit = self._views[key] = (committed, view, spark)
+        return hit[1]
+
+    def evict(self, table_dir: str) -> None:
+        """Drop every snapshot view over ``table_dir`` (DROP TABLE)."""
+        table_dir = os.path.abspath(table_dir)
+        with self._views_lock:
+            for key in [k for k in self._views if k[1] == table_dir]:
+                self._drop(key)
+
+    def _sweep(self, table_dir: str) -> None:
+        """Under the lock: drop entries whose manifest is gone, and those
+        of ``table_dir`` whose manifest now holds another snapshot."""
+        for key, (committed, _, _) in list(self._views.items()):
+            path = os.path.join(key[1], "metadata", f"v{key[2]}.json")
+            if not os.path.isfile(path):
+                self._drop(key)
+            elif key[1] == table_dir:
+                try:
+                    now = SnapshotTable._load_manifest_header(path)["committed_at_us"]
+                except OSError:  # expired since the isfile check
+                    now = None
+                if now != committed:
+                    self._drop(key)
+
+    def _drop(self, key: tuple[str, str, int]) -> None:
+        _, view, spark = self._views.pop(key)
+        spark.catalog.dropTempView(view)
+
 
 def rewrite_time_travel(
-    spark: SparkSession, sql: str, resolver: SnapshotResolver | None
+    spark: SparkSession,
+    sql: str,
+    resolver: SnapshotResolver | None,
+    transient: list[str] | None = None,
 ) -> str:
-    """Replace every time-travel clause with a temp view over the resolved
-    snapshot read. Bare references to *registered* snapshot tables are also
-    rewritten — to a fresh current-snapshot view — so the same table name
-    queries normally and time-travels in one statement (the reference reads
-    ``events_time_travel`` both ways, AthenaClientTests.cs:367-380).
-    Returns the SQL unchanged when nothing applies."""
+    """Replace every time-travel clause with the temp view of the resolved
+    snapshot. Bare references to *registered* snapshot tables are also
+    rewritten — to the view of the current snapshot — so the same table
+    name queries normally and time-travels in one statement (the reference
+    reads ``events_time_travel`` both ways, AthenaClientTests.cs:367-380).
+    Returns the SQL unchanged when nothing applies.
+
+    Snapshot views are shared and outlive the call
+    (:meth:`SnapshotResolver.snapshot_view`). ``$metadata`` relations get
+    fresh per-call views; their names are appended to ``transient`` when
+    given, for the caller to drop once the statement is analyzed."""
     has_clause = "as of" in sql.lower()
     registered = resolver.registered_names() if resolver is not None else []
     has_bare = any(
@@ -206,6 +280,8 @@ def rewrite_time_travel(
                         continue
                     view = f"__meta_{name.split('.')[-1]}_{kind}_{uuid.uuid4().hex[:8]}"
                     _META_DF[kind](table).createOrReplaceTempView(view)
+                    if transient is not None:
+                        transient.append(view)
                     meta_views[kind] = view
                 repls.append((m.start(), m.end(), meta_views[kind]))
     if has_clause:
@@ -226,17 +302,15 @@ def rewrite_time_travel(
                     f"time travel requested on unknown snapshot table {name!r}"
                 )
             if m.group("ts") is not None:
-                df = table.read_as_of(parse_ts_literal(m.group("ts")))
+                sid = table.snapshot_id_as_of(parse_ts_literal(m.group("ts")))
             elif m.group("ref") is not None:
-                df = table.read_ref(m.group("ref"))  # branch or tag head
+                sid = table.ref_snapshot_id(m.group("ref"))  # branch or tag head
             else:
-                df = table.read_version(int(m.group("ver")))
-            view = f"__tt_{name.split('.')[-1]}_{uuid.uuid4().hex[:8]}"
-            df.createOrReplaceTempView(view)
-            repls.append((m.start(), m.end(), view))
+                sid = int(m.group("ver"))
+            repls.append((m.start(), m.end(), resolver.snapshot_view(spark, table, sid)))
     if has_bare:
-        current_views: dict[str, str] = {}
         for name in registered:
+            view = None
             for m in re.finditer(
                 rf"(?<![\w.]){re.escape(name)}(?![\w.])", sql, re.IGNORECASE
             ):
@@ -244,11 +318,13 @@ def rewrite_time_travel(
                     s < m.end() and m.start() < e for s, e, _ in repls
                 ):
                     continue
-                if name not in current_views:
-                    view = f"__cur_{name.split('.')[-1]}_{uuid.uuid4().hex[:8]}"
-                    resolver.resolve(spark, name).read().createOrReplaceTempView(view)
-                    current_views[name] = view
-                repls.append((m.start(), m.end(), current_views[name]))
+                if view is None:
+                    table = resolver.resolve(spark, name)
+                    sid = table.current_snapshot_id()
+                    if sid is None:
+                        raise EngineError(f"table {table.table_dir} has no snapshots")
+                    view = resolver.snapshot_view(spark, table, sid)
+                repls.append((m.start(), m.end(), view))
     if not repls:
         return sql
     repls.sort()
