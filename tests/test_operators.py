@@ -163,6 +163,86 @@ def test_lazy_skew_report_fires_without_extra_job(spark, caplog):
     ), msgs
 
 
+def test_finished_skew_pollers_are_pruned(spark):
+    """A long-lived driver does not accumulate poller threads: once a
+    guarded plan has run and its poller has reported, the next plan's
+    registration drops that finished thread from ``_LIVE_POLLERS``."""
+    import trino_iceberg_spark.operators.diagnostics as diag
+
+    rows = [(i, [1.0, 0.0]) for i in range(20)] + [(142, [1.0, 0.0])] + [
+        (157 + i, [0.0, 1.0]) for i in range(3)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    finished: list = []
+    last: list = []
+    for _ in range(4):
+        before = list(diag._LIVE_POLLERS)
+        dead = [t for t in before if not t.is_alive()]
+        assert all(t in dead for t in last)  # the previous plan's, reported
+        out = S.semantic_dedup_pairs(
+            df, "embedding", "vec_id", threshold=0.9, num_cells=2,
+            max_cell_size=5, eager_diagnostics=False,
+        )
+        mine = [t for t in diag._LIVE_POLLERS if t not in before]
+        assert mine
+        assert not any(t in diag._LIVE_POLLERS for t in dead)
+        out.write.format("noop").mode("overwrite").save()
+        for t in mine:
+            t.join(timeout=60)
+            assert not t.is_alive()
+        finished += mine
+        last = mine
+    assert len(finished) >= 4
+    assert not any(t in diag._LIVE_POLLERS for t in finished[: -len(last)])
+
+
+@pytest.mark.parametrize("elem", ["float", "double"])
+def test_seeded_centroids_bit_identical_to_spark_expression(spark, elem):
+    """Driver-side centroid normalization equals the Spark expression it
+    replaced (``unit_vec(_as_double(...))`` over the same top-k rows)
+    float.hex for float.hex, for array<float> and array<double> input,
+    including all-zero vectors (+0.0 and -0.0), a vector with a null
+    element, and magnitudes from 1e-150 to 1e150."""
+    import random
+
+    rng = random.Random(7)
+    rows = []
+    for i in range(60):
+        scale = 10.0 ** rng.choice([-150, -20, -3, 0, 0, 0, 2, 30, 150])
+        if elem == "float":
+            scale = 10.0 ** rng.choice([-3, 0, 0, 2, 5])
+        rows.append((i, [rng.gauss(0.0, 1.0) * scale for _ in range(24)]))
+    rows.append((60, [0.0] * 24))
+    rows.append((61, [-0.0] * 24))
+    rows.append((62, [1.5] + [None] + [2.0] * 22))
+    rows.append((63, [rng.uniform(-1, 1) for _ in range(3)]))  # ragged length
+    df = spark.createDataFrame(rows, f"vec_id long, embedding array<{elem}>")
+
+    def hexes(vecs):
+        return [[None if x is None else x.hex() for x in v] for v in vecs]
+
+    for num_cells, seed in [(len(rows), 42), (16, 42), (16, 7)]:
+        got = S._seeded_centroids(df, "embedding", "vec_id", num_cells, seed)
+        expected = [
+            list(r["cv"])
+            for r in df.select(
+                F.col("vec_id").alias("cid"),
+                S.unit_vec(S._as_double(F.col("embedding"))).alias("cv"),
+            )
+            .orderBy(F.xxhash64(F.col("cid") + seed))
+            .limit(num_cells)
+            .collect()
+        ]
+        assert len(got) == num_cells
+        assert hexes(got) == hexes(expected)
+        if num_cells == len(rows):
+            # every special row is among the centroids compared above
+            got_hex = hexes(got)
+            assert [(0.0).hex()] * 24 in got_hex
+            assert [(-0.0).hex()] * 24 in got_hex
+            assert [None] * 24 in got_hex
+
+
 def test_incremental_minhash_equals_full_run_on_touching_pairs(spark, docs):
     """Ingest-path contract: incremental pairs == full self-join pairs
     restricted to those touching the increment (same hash family → same

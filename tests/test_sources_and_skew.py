@@ -140,3 +140,100 @@ def test_load_events_sets_nanos_conf_itself(spark):
         assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
     finally:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+
+# --- memoized parquet schemas (sources.testdata.read_parquet) --------------
+
+
+def _jobs_in_group(spark, fn):
+    """(result of fn(), number of Spark jobs it ran) via a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    gid = f"schema_memo_{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, gid)
+    try:
+        out = fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def _write_tiny(path, table):
+    import pyarrow.parquet as pq
+
+    pq.write_table(table, str(path))
+
+
+def test_repeat_load_runs_no_schema_job(spark, tmp_path):
+    """The first load of a file infers its schema (one job); a second load
+    of the unchanged file runs no job and returns the same schema, as a
+    fresh relation that can be self-joined."""
+    import pyarrow as pa
+
+    from trino_iceberg_spark.sources.testdata import load_table
+
+    _write_tiny(tmp_path / "nation.parquet",
+                pa.table({"k": [1, 2, 3], "name": ["a", "b", "c"]}))
+    first, jobs1 = _jobs_in_group(spark, lambda: load_table(spark, str(tmp_path), "nation"))
+    second, jobs2 = _jobs_in_group(spark, lambda: load_table(spark, str(tmp_path), "nation"))
+    assert jobs1 >= 1
+    assert jobs2 == 0
+    assert second.schema == first.schema
+    joined = first.alias("a").join(second.alias("b"), first["k"] == second["k"] + 1)
+    assert sorted(r["k"] for r in joined.select(first["k"]).collect()) == [2, 3]
+
+
+def test_rewritten_file_reads_its_new_schema(spark, tmp_path):
+    import pyarrow as pa
+
+    from trino_iceberg_spark.sources.testdata import read_parquet
+
+    path = tmp_path / "t.parquet"
+    _write_tiny(path, pa.table({"a": [1, 2]}))
+    assert read_parquet(spark, str(path)).columns == ["a"]
+    _write_tiny(path, pa.table({"a": [1, 2], "b": ["x", "y"]}))
+    df = read_parquet(spark, str(path))
+    assert df.columns == ["a", "b"]
+    assert sorted(tuple(r) for r in df.collect()) == [(1, "x"), (2, "y")]
+
+
+def test_binary_as_string_flip_changes_memoized_schema(spark, tmp_path):
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    from trino_iceberg_spark.sources.testdata import read_parquet
+
+    key = "spark.sql.parquet.binaryAsString"
+    path = tmp_path / "bin.parquet"
+    _write_tiny(path, pa.table({"b": pa.array([b"xy", b"z"], type=pa.binary())}))
+    old = spark.conf.get(key, None)
+    try:
+        spark.conf.set(key, "false")
+        assert isinstance(read_parquet(spark, str(path)).schema["b"].dataType, T.BinaryType)
+        spark.conf.set(key, "true")
+        df = read_parquet(spark, str(path))
+        assert isinstance(df.schema["b"].dataType, T.StringType)
+        assert sorted(r["b"] for r in df.collect()) == ["xy", "z"]
+        spark.conf.set(key, "false")
+        assert isinstance(read_parquet(spark, str(path)).schema["b"].dataType, T.BinaryType)
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
+def test_repeat_events_load_keeps_timestamp_ts(spark, sf_dir):
+    """events (the nanosAsLong path) loads with ts as TIMESTAMP on the
+    inferring read and on the memoized one."""
+    from pyspark.sql import types as T
+
+    from trino_iceberg_spark.sources.testdata import load_table
+
+    for _ in range(2):
+        df = load_table(spark, sf_dir, "events")
+        assert isinstance(df.schema["ts"].dataType, T.TimestampType)
+        assert df.filter(F.col("ts").isNotNull()).limit(1).count() == 1

@@ -63,9 +63,11 @@ class CacheRegistry:
         manager), so without a handle they linger until nondeterministic
         ContextCleaner GC (ADVICE r16). ``unpersist_all`` frees them by
         unpersisting the checkpointed RDD behind the LogicalRDD plan.
-        NOTE: a released checkpoint is unrecoverable — the checkpoint
-        truncated its lineage — so release only after the result is
-        fully materialized, same contract as the pinned tables."""
+        NOTE: unlike a pinned table, a released checkpoint does not
+        recompute. A released pin falls back to its lineage; a released
+        local checkpoint has no lineage (the checkpoint truncated it), so
+        any later action over it fails with "block not found". Release
+        only after every result that reads it is fully materialized."""
         self._checkpointed.append(df)
         return df
 

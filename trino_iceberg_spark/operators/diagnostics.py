@@ -45,8 +45,10 @@ __all__ = ["async_skew_report", "skew_guard_report"]
 
 _SEQ = itertools.count()
 
-#: test hook — threads register here so tests can join them
+#: test hook — threads register here so tests can join them; finished
+#: threads are pruned on each registration
 _LIVE_POLLERS: list[threading.Thread] = []
+_POLLERS_LOCK = threading.Lock()
 
 
 def async_skew_report(
@@ -86,7 +88,11 @@ def async_skew_report(
     t = threading.Thread(
         target=poll, daemon=True, name=f"tis-skew-report-{next(_SEQ)}"
     )
-    _LIVE_POLLERS.append(t)
+    # Finished pollers are dropped here, so a long-lived driver holds only
+    # the threads still waiting.
+    with _POLLERS_LOCK:
+        _LIVE_POLLERS[:] = [p for p in _LIVE_POLLERS if p.is_alive()]
+        _LIVE_POLLERS.append(t)
     t.start()
 
 

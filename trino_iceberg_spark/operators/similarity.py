@@ -264,15 +264,43 @@ def _seeded_centroids(
     """Deterministic "k-means-lite" centroids: ``num_cells`` unit vectors
     taken in seeded-hash order (collected once — tiny by construction).
     Shared by :func:`ivf_topk` (search) and :func:`semantic_dedup_pairs`
-    (dedup) so both see identical cells."""
-    cvec = unit_vec(_as_double(F.col(embedding_col)))
+    (dedup) so both see identical cells.
+
+    Only the ``num_cells`` raw vectors are collected; they are normalized
+    here by :func:`_spark_unit`, bit-identical to ``unit_vec(_as_double())``
+    but without running that per-element lambda on every row before the
+    top-k."""
     cents = (
-        df.select(F.col(id_col).alias("cid"), cvec.alias("cv"))
+        df.select(F.col(id_col).alias("cid"), F.col(embedding_col).alias("cv"))
         .orderBy(F.xxhash64(F.col("cid") + seed))
         .limit(num_cells)
         .collect()
     )
-    return [list(row["cv"]) for row in cents]
+    return [list(_spark_unit(row["cv"])) for row in cents]
+
+
+def _spark_unit(vec: list | None) -> list | None:
+    """Driver-side twin of ``unit_vec(_as_double(col))`` for one collected
+    array, with Spark's exact arithmetic: elements widen to double (exact
+    for float), the norm is the sequential fold ``acc + x*x`` from 0.0
+    then ``sqrt`` (not ``np.linalg.norm``, not a compensated ``sum``),
+    and each element is divided by it. A zero-norm vector passes through;
+    a null array stays null and a null element nulls every element (the
+    norm is null)."""
+    import math
+
+    if vec is None:
+        return None
+    xs = [None if x is None else float(x) for x in vec]
+    if None in xs:
+        return [None] * len(xs)
+    acc = 0.0
+    for x in xs:
+        acc = acc + x * x
+    n = math.sqrt(acc)
+    if n == 0:
+        return xs
+    return [x / n for x in xs]
 
 
 def _derived_num_cells(n_rows: int, target_cell_size: int) -> int:

@@ -18,7 +18,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.testdata import load_table, work_dir
+from ..sources.testdata import load_table, read_parquet, work_dir
 from .registry import register
 
 
@@ -31,7 +31,7 @@ def _staged_stream(spark: SparkSession, sf_dir: str, tag: str):
     link = os.path.join(stage_dir, "events.parquet")
     src = os.path.join(sf_dir, "events.parquet")
     os.symlink(src, link)
-    raw_schema = spark.read.parquet(src).schema
+    raw_schema = read_parquet(spark, src).schema
     stream = (
         spark.readStream.schema(raw_schema)
         .option("maxFilesPerTrigger", "1")
@@ -418,7 +418,7 @@ def st08_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = os.path.join(sf_dir, "events.parquet")
     os.symlink(src, os.path.join(stage_dir, "a.parquet"))
     os.symlink(src, os.path.join(stage_dir, "b.parquet"))
-    raw_schema = spark.read.parquet(src).schema
+    raw_schema = read_parquet(spark, src).schema
     stream = _fix_ts(
         spark.readStream.schema(raw_schema)
         .option("maxFilesPerTrigger", "1")

@@ -1,21 +1,25 @@
 """Loaders for the driver-provided parquet tables.
 
 Tables: region nation customer supplier part orders lineitem events
-documents embeddings (TESTDATA.md). Every loader is a plain
-``spark.read.parquet`` so Catalyst gets full pushdown/pruning; nothing is
-cached or collected here.
+documents embeddings (TESTDATA.md). Every loader is a plain parquet
+scan so Catalyst gets full pushdown/pruning; nothing is cached or
+collected here. The one thing remembered is each file's schema
+(:func:`read_parquet`), so a repeat read runs no inference job.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import stat
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 __all__ = [
     "TABLES",
+    "read_parquet",
     "load_table",
     "load_tables",
     "register_views",
@@ -183,6 +187,52 @@ def _spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     return df.repartition(target, F.col(df.columns[0]))
 
 
+#: SQL confs that change what parquet schema inference returns for the
+#: same file; their current values are part of every memo stamp.
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema",
+)
+
+#: absolute file path -> (stamp, inferred StructType); one entry per path.
+_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job on
+    repeat reads of an unchanged file.
+
+    Inference runs a one-task Spark job (~0.1 s) on every call; here the
+    inferred schema is remembered per absolute path, stamped with the
+    file's ``(st_mtime_ns, st_size)`` and the current values of the confs
+    that change inference. A matching stamp reads with that schema,
+    which plans the same scan; any other stamp re-infers and replaces
+    the entry. Every call returns a fresh relation (fresh attribute
+    ids), so DataFrame self-joins of two reads keep working. Paths that
+    are not a regular file (directories, missing files) always infer:
+    a directory's stamp does not see its files being rewritten."""
+    key = os.path.abspath(path)
+    try:
+        st = os.stat(key)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    stamp = (st.st_mtime_ns, st.st_size) + tuple(
+        spark.conf.get(c, None) for c in _SCHEMA_CONFS
+    )
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (stamp, df.schema)
+    return df
+
+
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, *, spread: bool = False
 ) -> DataFrame:
@@ -200,10 +250,9 @@ def load_table(
             spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         except Exception:  # noqa: BLE001 — locked-down conf never blocks a read
             pass
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         from pyspark.sql import functions as F
-        from pyspark.sql import types as T
 
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, T.LongType):
