@@ -3017,3 +3017,275 @@ def test_incremental_analyze_ineligibility(spark, tmp_path):
     t3.analyze(["k"])  # partial: k loses its sketch by design
     with pytest.raises(EngineError, match="ineligible"):
         t3.analyze(mode="incremental")
+
+
+# --- row-level writes: one RowDelta commit ---------------------------------
+
+
+def _order_rows(spark, ks, price=None):
+    return spark.createDataFrame(
+        [(k, k % 7, float(k) * 10 if price is None else price) for k in ks],
+        "k long, bucket long, price double",
+    )
+
+
+def _jobs_of(spark, fn):
+    """Spark jobs ``fn()`` runs, via a fresh statusTracker job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    gid = f"row_delta_{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, gid)
+    try:
+        fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def _unreferenced_data_files(t):
+    """Files under data/ that no manifest references."""
+    refd = set()
+    for s in t.snapshots():
+        refd |= set(s.files) | set(s.position_deletes or ())
+        refd |= {r["file"] for r in s.equality_deletes or ()}
+    return sorted(
+        f"data/{f}" for f in os.listdir(t.data_dir) if f"data/{f}" not in refd
+    )
+
+
+def _rdc_update_plan(frame):
+    """row_delta_commit plan: re-price every row with k < 3."""
+    hit = frame.filter(F.col("k") < 3)
+    return (
+        hit.select(
+            F.col(SnapshotTable._POS_FILE).alias("file_path"),
+            F.col(SnapshotTable._POS_IDX).alias("pos"),
+        ),
+        hit.select("k", "bucket", F.lit(-1.0).alias("price")),
+    )
+
+
+def _with_outstanding_deletes(t, spark):
+    t.delete_where(F.col("k") == 0, mode="merge-on-read")
+    t.delete_where(F.col("k") == 11, mode="merge-on-read")
+    t.delete_by_key(_order_rows(spark, [5, 15]).select("k"), ["k"])
+
+
+def test_row_level_writers_spark_jobs_pinned(spark, tmp_path):
+    """Spark jobs per row-level writer on a fresh two-append table. The
+    staged delete file's row count comes from its parquet footer, so
+    merge-on-read DELETE, row_delta_commit and rewrite_delete_files run
+    no re-read of it; persisted match frames are released afterwards."""
+    keys = _order_rows(spark, [1, 2, 3]).select("k")
+    upsert = _order_rows(spark, list(range(5, 15)) + [20, 21], price=-1.0)
+    writers = {
+        "cow_delete": lambda t: t.delete_where(
+            F.col("k") % 3 == 0, mode="copy-on-write"),
+        "mor_delete": lambda t: t.delete_where(
+            F.col("k") % 3 == 0, mode="merge-on-read"),
+        "cow_update": lambda t: t.update_where(
+            F.col("k") < 5, {"price": F.lit(0.0)}, mode="copy-on-write"),
+        "mor_update": lambda t: t.update_where(
+            F.col("k") < 5, {"price": F.lit(0.0)}, mode="merge-on-read"),
+        "cow_merge": lambda t: t.merge(upsert, ["k"], mode="copy-on-write"),
+        "mor_merge": lambda t: t.merge(upsert, ["k"], mode="merge-on-read"),
+        "delete_by_key_counted": lambda t: t.delete_by_key(keys, ["k"]),
+        "delete_by_key_blind": lambda t: t.delete_by_key(
+            keys, ["k"], count_matches=False),
+        "row_delta_commit": lambda t: t.row_delta_commit(_rdc_update_plan),
+        "rewrite_delete_files": lambda t: t.rewrite_delete_files(),
+    }
+    storage = spark.sparkContext._jsc.sc().getRDDStorageInfo
+    cached_before = len(storage())
+    got = {}
+    for name, write in writers.items():
+        t = SnapshotTable(spark, str(tmp_path / name))
+        t.append(_order_rows(spark, range(0, 10)))
+        t.append(_order_rows(spark, range(10, 20)))
+        if name == "rewrite_delete_files":
+            _with_outstanding_deletes(t, spark)
+        got[name] = _jobs_of(spark, lambda: write(t))
+        assert len(storage()) == cached_before, name
+    assert got == {
+        "cow_delete": 8,
+        "mor_delete": 2,
+        "cow_update": 8,
+        "mor_update": 3,
+        "cow_merge": 16,
+        "mor_merge": 8,
+        "delete_by_key_counted": 7,
+        "delete_by_key_blind": 2,
+        "row_delta_commit": 3,
+        "rewrite_delete_files": 11,
+    }, got
+
+
+_RACE_WRITERS = {
+    "cow_delete": lambda t: t.delete_where(F.col("k") < 3, mode="copy-on-write"),
+    "mor_delete": lambda t: t.delete_where(F.col("k") < 3, mode="merge-on-read"),
+    "cow_update": lambda t: t.update_where(
+        F.col("k") < 3, {"price": F.lit(-1.0)}, mode="copy-on-write"),
+    "mor_update": lambda t: t.update_where(
+        F.col("k") < 3, {"price": F.lit(-1.0)}, mode="merge-on-read"),
+    "cow_merge": lambda t: t.merge(
+        _order_rows(t.spark, [0, 1, 2], price=-1.0), ["k"], mode="copy-on-write"),
+    "mor_merge": lambda t: t.merge(
+        _order_rows(t.spark, [0, 1, 2], price=-1.0), ["k"], mode="merge-on-read"),
+    "delete_by_key_counted": lambda t: t.delete_by_key(
+        _order_rows(t.spark, [0, 1, 2]).select("k"), ["k"]),
+    "row_delta_commit": lambda t: t.row_delta_commit(_rdc_update_plan),
+    "delete_by_key_blind": lambda t: t.delete_by_key(
+        _order_rows(t.spark, [0, 1, 2]).select("k"), ["k"], count_matches=False),
+    "rewrite_delete_files": lambda t: t.rewrite_delete_files(),
+}
+
+
+@pytest.mark.parametrize("writer", list(_RACE_WRITERS))
+def test_row_level_writer_lost_race(spark, tmp_path, writer):
+    """A second handle appends between a writer's staging and its commit.
+    A validating writer re-derives; once its budget is spent it raises
+    the typed conflict, every racer row survives and every staged file
+    is reclaimed; with one race and a free second attempt it commits the
+    re-derived result. A blind equality delete composes with the racer's
+    append and its horizon, taken at commit time, covers the racer's
+    segment. rewrite_delete_files has no retry loop: it raises."""
+    from trino_iceberg_spark.errors import CommitConflictError
+
+    path = str(tmp_path / writer)
+    t = SnapshotTable(spark, path, commit_attempts=2)
+    t.append(_order_rows(spark, range(10)))
+    if writer == "rewrite_delete_files":
+        _with_outstanding_deletes(t, spark)
+    other = SnapshotTable(spark, path)
+    real_commit = t._commit_row_delta
+    blind = writer == "delete_by_key_blind"
+    racers: list[int] = []  # keys the racer appended, one row each
+
+    def race(limit):
+        """Patch the commit step: race until ``limit`` racer rows exist."""
+
+        def commit(delta):
+            if len(racers) < limit:
+                # the blind delete's racer carries a key it deletes
+                racers.append(1 if blind else 100 + len(racers))
+                other.append(_order_rows(spark, [racers[-1]], price=0.0))
+            return real_commit(delta)
+
+        t._commit_row_delta = commit
+
+    def visible():
+        return sorted((r["k"], r["price"]) for r in t.read().collect())
+
+    before = visible()
+    write = _RACE_WRITERS[writer]
+    if blind:
+        race(limit=1)
+        snap = write(t)
+        assert [k for k, _ in visible()] == list(range(3, 10))
+        racer_head = t._snapshot_by_id(snap.parent_snapshot_id)
+        assert snap.equality_deletes[-1]["segments"] == list(racer_head.manifest_list)
+        assert _unreferenced_data_files(t) == []
+        return
+    race(limit=len(racers) + 2)
+    with pytest.raises(CommitConflictError) as exc:
+        write(t)
+    assert _unreferenced_data_files(t) == []
+    assert visible() == sorted(before + [(k, 0.0) for k in racers])
+    if writer == "rewrite_delete_files":
+        assert len(racers) == 1  # one attempt: no retry loop
+        return
+    assert len(racers) == 2 and exc.match("validation race")
+    race(limit=len(racers) + 1)
+    write(t)
+    assert len(racers) == 3
+    assert _unreferenced_data_files(t) == []
+    kept = [(k, p) for k, p in before if k >= 3] + [(k, 0.0) for k in racers]
+    if writer in ("cow_delete", "mor_delete", "delete_by_key_counted"):
+        want = kept
+    else:
+        want = kept + [(k, -1.0) for k in (0, 1, 2)]
+    assert visible() == sorted(want)
+    assert t.current_snapshot().row_count == len(want)
+
+
+def test_mor_merge_pruned_to_no_file_still_inserts(spark, tmp_path):
+    """A merge-on-read SQL MERGE whose source key bounds exclude every
+    data file: the match scan reads no file, the plan runs on an empty
+    frame, and the NOT MATCHED route still lands."""
+    from trino_iceberg_spark.client import AthenaSparkClient
+
+    tdir = str(tmp_path / "mor_prune_none")
+    t = SnapshotTable(spark, tdir)
+    t.append(_order_rows(spark, range(0, 10)))
+    t.append(_order_rows(spark, range(10, 20)))
+    t.set_table_property("write.merge.mode", "merge-on-read")
+    assert t.prune_files(t.current_snapshot(), [("k", ">=", 100)]) == []
+    client = AthenaSparkClient(spark)
+    client.register_snapshot_table("mor_prune_none", tdir)
+    _order_rows(spark, [100, 101], price=1.0).createOrReplaceTempView(
+        "mor_prune_src"
+    )
+    n = client.execute(
+        "MERGE INTO mor_prune_none t USING (SELECT * FROM mor_prune_src) s "
+        "ON t.k = s.k WHEN MATCHED THEN UPDATE SET price = s.price "
+        "WHEN NOT MATCHED THEN INSERT VALUES (s.k, s.bucket, s.price)"
+    )
+    assert n == 2
+    head = t.current_snapshot()
+    assert head.operation == "merge" and head.row_count == 22
+    assert not head.position_deletes
+    assert sorted(r["k"] for r in t.read().collect()) == list(range(20)) + [100, 101]
+
+
+def test_row_level_writes_on_legacy_table(spark, tmp_path):
+    """A legacy inline manifest without schema tracking (no
+    schema_columns) and with a name-keyed partition spec: the match scan
+    prunes through it, and when no file survives the plan gets an empty
+    frame of the files' own columns, so a pure insert still lands."""
+    import json as _json
+
+    t = SnapshotTable(spark, str(tmp_path / "legacy_rows"))
+    t.append(_order_rows(spark, [0, 7, 14]).coalesce(1))  # bucket 0
+    t.append(_order_rows(spark, [1, 8, 15]).coalesce(1))  # bucket 1
+    snap = t.current_snapshot()
+    p = os.path.join(t.metadata_dir, f"v{snap.snapshot_id}.json")
+    with open(p, "r", encoding="utf-8") as fh:
+        m = _json.load(fh)
+    for k in ("schema_id", "last_column_id", "schemas", "manifest_list"):
+        m.pop(k, None)
+    m["files"] = list(snap.files)
+    m["partition_specs"] = {
+        "1": [{"name": "bucket", "source": "bucket", "transform": "identity"}]
+    }
+    m["file_partitions"] = {
+        f: {"spec": 1, "values": {"bucket": str(b)}}
+        for f, b in zip(snap.files, (0, 1))
+    }
+    with open(p, "w", encoding="utf-8") as fh:
+        _json.dump(m, fh)
+
+    legacy = SnapshotTable(spark, t.table_dir)
+    head = legacy.current_snapshot()
+    assert head.schema_columns is None and head.manifest_list is None
+    assert legacy.prune_files(head, [("bucket", "=", 1)]) == [snap.files[1]]
+    legacy.delete_where(
+        F.col("bucket") == 1, mode="merge-on-read", filters=[("bucket", "=", 1)]
+    )
+
+    def insert_only(frame):
+        assert frame.columns[:3] == ["k", "bucket", "price"]
+        assert frame.count() == 0
+        return None, _order_rows(spark, [50], price=5.0)
+
+    legacy.row_delta_commit(insert_only, filters=[("bucket", "=", 5)])
+    legacy.update_where(
+        F.col("k") == 7, {"price": F.lit(-1.0)}, mode="merge-on-read",
+        filters=[("bucket", "=", 0)],
+    )
+    got = sorted((r["k"], r["price"]) for r in legacy.read().collect())
+    assert got == [(0, 0.0), (7, -1.0), (14, 140.0), (50, 5.0)]
+    assert legacy.current_snapshot().row_count == 4
+    assert legacy.current_snapshot().schema_columns is None

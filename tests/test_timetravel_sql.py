@@ -1762,7 +1762,7 @@ def test_dnf_pruning_skips_gap_files_and_prunes_mor_probe(spark, tmp_path):
     """Round 15: (a) prune_files accepts DNF (list of conjunct lists)
     and unions the per-disjunct candidate sets — a range-UNION predicate
     skips the files in the gap; (b) the merge-on-read DML match scan is
-    zone-map-pruned through the same filters (``_pruned_pos_probe``), so
+    zone-map-pruned through the same filters (``_match_frame``), so
     a selective MOR DELETE/UPDATE scans the key band, not the table —
     and a predicate excluding every file commits nothing at all."""
     tdir = str(tmp_path / "dnftab")

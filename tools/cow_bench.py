@@ -2,8 +2,8 @@
 """Touched-file copy-on-write DML microbench: empirical evidence for the
 round-14 storage-layer claim — a selective CoW DELETE/UPDATE on a big
 clustered table rewrites only the files CONTAINING matched rows
-(_cow_touched_rewrite), so its cost tracks the MATCHED data, not the
-table.
+(_cow_touched_rewrite, one row delta replacing the touched files), so
+its cost tracks the MATCHED data, not the table.
 
 Method: build key-clustered snapshot tables at growing row counts (each
 tier doubles the previous, disjoint per-file key ranges so zone maps are

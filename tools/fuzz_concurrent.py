@@ -6,7 +6,8 @@ overwrite / delete_where / update_where / merge / delete_by_key /
 add_column / compact_small_files / rewrite_delete_files race on one
 table, and the outcome must be LINEARIZABLE —
 exactly the guarantee Nessie/Iceberg's optimistic commit model makes
-and `_commit_version` claims.
+and `_commit_version` claims (every row-level write commits through
+`_commit_row_delta` and re-derives in `_row_level_commit`).
 
 Each schedule: W writer threads each run K operations against the same
 table (fresh per schedule). Operations tag themselves with an `op_id`
@@ -194,9 +195,10 @@ def run_schedule(spark, base_dir: str, seed: int, writers: int = 4, ops: int = 3
                             keys, ["v"], properties={"op_id": str(op["op_id"])}
                         )
                     elif op["kind"] == "merge":
-                        # upsert by key: retries internally past its entry
-                        # validation (_rewrite_commit); only a stale-schema
-                        # entry read may legally conflict, racing an evolve
+                        # upsert by key: re-derives internally past its
+                        # entry validation (_row_level_commit); only a
+                        # stale-schema entry read may legally conflict,
+                        # racing an evolve
                         t.merge(
                             _df_for(spark, t, op["vals"]),
                             ["v"],

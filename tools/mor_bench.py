@@ -151,7 +151,7 @@ def main() -> int:
             2,
         )
         # round 15: the same contained MOR delete WITH prune filters —
-        # _pruned_pos_probe restricts the match scan to the files the
+        # _match_frame restricts the match scan to the files the
         # zone maps admit (the SQL DML arm passes these automatically
         # from the WHERE text), so the write-side scan reads one file's
         # band instead of the table

@@ -186,6 +186,42 @@ class Snapshot:
         return self.schemas[str(self.schema_id)]
 
 
+@dataclasses.dataclass(frozen=True)
+class _RowDelta:
+    """One staged row-level change (Iceberg's ``RowDelta``): data files
+    added or replaced, position deletes added, at most one equality
+    delete. :meth:`SnapshotTable._apply_row_delta` turns it into one
+    snapshot's manifest. Every row-level write — delete, update, merge
+    in both write modes, ``delete_by_key``, ``row_delta_commit``,
+    ``rewrite_delete_files`` — stages one."""
+
+    operation: str
+    # The snapshot the change was derived from; the commit validates the
+    # head is still this one. None = blind: composes against any head.
+    base: Snapshot | None
+    properties: dict | None = None
+    new_files: tuple[str, ...] = ()
+    new_partitions: dict = dataclasses.field(default_factory=dict)
+    new_rows: int = 0
+    new_stats: dict = dataclasses.field(default_factory=dict)
+    # data files the change replaces (copy-on-write)
+    removed_files: frozenset = frozenset()
+    # visible rows the change removes: what the replaced files held plus
+    # what its new deletes kill
+    removed_rows: int = 0
+    position_deletes: tuple[str, ...] = ()
+    # outstanding delete files the change consolidates away
+    removed_deletes: frozenset = frozenset()
+    equality_delete: str | None = None
+    key_cols: tuple[str, ...] = ()
+
+    @property
+    def staged(self) -> list[str]:
+        """Files this change wrote, reclaimed if its commit is lost."""
+        eq = [self.equality_delete] if self.equality_delete else []
+        return [*self.new_files, *self.position_deletes, *eq]
+
+
 class SnapshotTable:
     """A snapshot-versioned parquet table rooted at ``table_dir``."""
 
@@ -1112,9 +1148,10 @@ class SnapshotTable:
         (hive staging parsed back into per-file partition values) and move
         them into ``data/``. Returns (new_files, new_file_partitions,
         row_count, per-file footer stats). Shared by every data-writing
-        commit (_commit, merge-on-read update); files are invisible until
-        a manifest references them, so a failed commit just orphans them
-        for the age-floored sweep."""
+        commit: _commit, and each row-level write through _stage_rows.
+        Files are invisible until a manifest references them; a lost
+        row-level commit reclaims them (_commit_row_delta), a crash
+        leaves them to the age-floored orphan sweep."""
         import pyarrow.parquet as pq
 
         staging = os.path.join(self.table_dir, f"_staging_{uuid.uuid4().hex}")
@@ -3763,7 +3800,12 @@ class SnapshotTable:
         upd_a = changed.select("_rb.*").withColumn("_change_type", F.lit("update_after"))
         return ins.unionByName(dels).unionByName(upd_b).unionByName(upd_a)
 
-    # -- row-level operations (copy-on-write) ----------------------------
+    # -- row-level operations ---------------------------------------------
+    # Every row-level write is ONE RowDelta: a stage step derives the
+    # change against the head it read and writes its files (invisible
+    # until a manifest references them), _apply_row_delta turns it into
+    # the child manifest, and _row_level_commit re-derives on a lost
+    # validation race.
     def _rewrite_commit(self, derive, properties=None) -> Snapshot:
         """Read-modify-write commit with serializable isolation:
         ``derive(current_df)`` produces the rewritten table, which commits
@@ -3796,6 +3838,224 @@ class SnapshotTable:
             f"race {self.commit_attempts} times — giving up"
         ) from last
 
+    def _apply_row_delta(self, prev: Snapshot | None, delta: _RowDelta) -> dict:
+        """The manifest of ``delta`` committed on top of ``prev`` — the one
+        builder of every row-level write. It re-runs against the
+        refreshed head on each commit attempt, so the equality-delete
+        horizon is the head AT COMMIT TIME: a racing append that
+        serializes first is covered, Iceberg's smaller-sequence rule."""
+        if delta.base is not None and (
+            prev.snapshot_id if prev else None
+        ) != delta.base.snapshot_id:
+            raise CommitConflictError(
+                f"concurrent update on {self.table_dir}: this "
+                f"{delta.operation} was derived from snapshot "
+                f"{delta.base.snapshot_id} but the table advanced"
+            )
+        if prev is None:
+            raise EngineError(f"table {self.table_dir} has no snapshots")
+        gone = delta.removed_files
+        keep = [f for f in prev.files if f not in gone]
+
+        def carried(per_file: dict | None) -> dict:
+            return {f: v for f, v in (per_file or {}).items() if f not in gone}
+
+        file_schemas = carried(prev.file_schemas)
+        file_schemas.update({f: prev.schema_id for f in delta.new_files})
+        file_stats = carried(prev.file_stats)
+        file_stats.update(delta.new_stats)
+        file_partitions = carried(prev.file_partitions)
+        file_partitions.update(delta.new_partitions)
+        # A replaced file MATERIALIZES its outstanding position deletes
+        # into the new images: records whose targets are all gone drop;
+        # records still naming a retained file keep applying (kilobyte
+        # metadata reads, cached per handle). Outstanding equality deletes
+        # never meet a replacement — their horizon pins the manifest-list
+        # prefix, so copy-on-write falls back to the full rewrite.
+        keep_set = set(keep)
+        pos = [
+            d
+            for d in prev.position_deletes or ()
+            if d not in delta.removed_deletes
+            and (not gone or self._pos_delete_targets([d]) & keep_set)
+        ]
+        eq = [
+            r
+            for r in prev.equality_deletes or ()
+            if r["file"] not in delta.removed_deletes
+        ]
+        if delta.equality_delete:
+            rec = {
+                "file": delta.equality_delete,
+                "key_cols": list(delta.key_cols),
+                "segments": list(prev.manifest_list or ()),
+            }
+            # Iceberg's equality_ids: keys resolve by FIELD ID at read
+            # time so a rename of a key column can't brick reads and a
+            # re-added same-name column can't resurrect deleted rows
+            # (round-10 judge repro).
+            key_ids = self._key_field_ids(prev, list(delta.key_cols))
+            if key_ids is not None:
+                rec["key_ids"] = key_ids
+            if prev.manifest_list is None:
+                # legacy inline-manifest head: no segments to anchor the
+                # horizon — pin the applicable files explicitly (stays
+                # correct after the table migrates to v2)
+                rec["applies_files"] = list(prev.files)
+            eq.append(rec)
+        manifest = {
+            "operation": delta.operation,
+            "files": keep + list(delta.new_files),
+            "row_count": prev.row_count - delta.removed_rows + delta.new_rows,
+            "schema_id": prev.schema_id,
+            "last_column_id": prev.last_column_id,
+            "schemas": dict(prev.schemas or {}) or None,
+            "file_schemas": file_schemas,
+            "file_stats": file_stats,
+            "properties": delta.properties or {},
+            "partition_specs": dict(prev.partition_specs or {}) or None,
+            "default_spec_id": prev.default_spec_id,
+            "file_partitions": file_partitions or None,
+            "position_deletes": pos + list(delta.position_deletes) or None,
+            "equality_deletes": eq or None,
+        }
+        if not gone and not delta.new_files and prev.manifest_list is not None:
+            # file entries untouched — reuse the parent's segment list
+            # verbatim: a delete-only commit is O(1) in table file count
+            manifest["manifest_list"] = list(prev.manifest_list)
+        return manifest
+
+    def _commit_row_delta(self, delta: _RowDelta) -> Snapshot:
+        """Commit one staged delta. A validated delta gets ONE attempt —
+        a moved head makes its staging stale, so the caller re-derives; a
+        blind delta composes against any head and spends the whole CAS
+        budget. A lost commit reclaims exactly the delta's staged files."""
+        try:
+            return self._commit_version(
+                "main",
+                lambda prev: self._apply_row_delta(prev, delta),
+                max_attempts=1 if delta.base is not None else None,
+            )
+        except CommitConflictError:
+            self._remove_quiet(delta.staged)
+            raise
+
+    def _row_level_commit(self, stage) -> Snapshot | None:
+        """The re-derive loop of every row-level write: read the head,
+        ``stage(head)`` → :class:`_RowDelta`, commit. A lost validation
+        race re-derives against the new head, up to ``commit_attempts``
+        times. ``stage`` returns None when the change cannot be a row
+        delta against that head; so does this loop."""
+        last: EngineError | None = None
+        op = "row-level write"
+        for _ in range(self.commit_attempts):
+            snap = self.current_snapshot()
+            if snap is None:
+                raise EngineError(f"table {self.table_dir} has no snapshots")
+            delta = stage(snap)
+            if delta is None:
+                return None
+            op = delta.operation
+            try:
+                return self._commit_row_delta(delta)
+            except CommitConflictError as exc:
+                if delta.base is None:
+                    raise  # blind: the commit already spent the whole budget
+                last = exc
+        raise CommitConflictError(
+            f"row-level {op} on {self.table_dir} lost the validation race "
+            f"{self.commit_attempts} times — giving up"
+        ) from last
+
+    def _match_frame(self, snap: Snapshot, filters=None) -> DataFrame:
+        """The match-scan input of row-level DML: the snapshot's VISIBLE
+        rows (both outstanding delete kinds applied, so already-dead rows
+        are never re-matched) with the (file, pos) identity columns
+        ``_POS_FILE``/``_POS_IDX``, zone-map-pruned to the files
+        ``filters`` admit — a selective DML scans the key band, not the
+        table (round 15). When no file survives, the frame is empty with
+        the same columns and reads no data: built from the declared
+        schema, or a limit(0) plan on a legacy table."""
+        files = self.prune_files(snap, filters) if filters else list(snap.files)
+        if files:
+            return self._visible_rows_with_pos(
+                dataclasses.replace(snap, files=tuple(files))
+            )
+        if snap.schema_columns is None:
+            return self._visible_rows_with_pos(snap).limit(0)
+        # limit(0) lets Catalyst fold everything planned over the frame
+        # into an empty local relation, so a match collect runs no job
+        return self._read_snapshot_files(
+            dataclasses.replace(snap, files=()), with_pos=True
+        ).limit(0)
+
+    def _positions(self, rows: DataFrame) -> DataFrame:
+        """Position-delete rows (file_path, pos) naming ``rows``."""
+        return rows.select(
+            F.col(self._POS_FILE).alias("file_path"),
+            F.col(self._POS_IDX).alias("pos"),
+        )
+
+    def _stage_rows(self, snap: Snapshot, df: DataFrame) -> dict:
+        """Stage ``df`` as new data files of ``snap`` (see
+        :meth:`_stage_data_files`), cast to its DECLARED types so the new
+        files share one physical parquet schema with the retained ones,
+        under its default partition spec. Returns the data-file fields
+        of a :class:`_RowDelta`."""
+        cols = snap.schema_columns
+        if cols is not None:
+            df = df.select(
+                *[F.col(c["name"]).cast(c["type"]).alias(c["name"]) for c in cols]
+            )
+        spec_id = snap.default_spec_id or 0
+        spec = (snap.partition_specs or {}).get(str(spec_id)) if spec_id else None
+        files, parts, rows, stats = self._stage_data_files(df, spec, spec_id, cols or [])
+        return {
+            "new_files": tuple(files),
+            "new_partitions": parts,
+            "new_rows": rows,
+            "new_stats": stats,
+        }
+
+    def _stage_equality_delete(
+        self, snap: Snapshot, keys: DataFrame, key_cols: list[str], count: bool
+    ) -> tuple[str | None, int]:
+        """Stage the distinct key rows of ``keys`` as one equality-delete
+        file, cast to ``snap``'s declared types so the read-path equality
+        join compares like against like (a source key of another dtype
+        would otherwise leave stale rows visible — round-10 advisor
+        finding). ``count`` also counts the visible rows the keys match
+        with one KEY-COLUMN-PRUNED scan, null-safe like the read path's
+        anti-join. Returns (file, matched rows); the file is None for an
+        empty key set."""
+        cols = snap.schema_columns
+        if cols is not None:
+            by_name = {c["name"]: c for c in cols}
+            missing = [c for c in key_cols if c not in by_name]
+            if missing:
+                raise EngineError(
+                    f"key columns {missing} not in table columns "
+                    f"{sorted(by_name)} for {self.table_dir}"
+                )
+            key_df = keys.select(
+                *[F.col(c).cast(by_name[c]["type"]).alias(c) for c in key_cols]
+            )
+        else:
+            key_df = keys.select(*key_cols)
+        key_df = key_df.distinct()
+        staged, _ = self._stage_delete_files(key_df, key_cols, "eqdel")
+        if not staged:
+            return None, 0
+        n_matched = 0
+        if count:
+            visible = self._read_snapshot(snap).select(*key_cols)
+            n_matched = visible.join(
+                F.broadcast(key_df),
+                self._nullsafe_key_cond(visible, key_df, key_cols),
+                "left_semi",
+            ).count()
+        return staged[0], n_matched
+
     def _cow_touched_rewrite(
         self, matcher, derive, filters=None, properties=None,
         always_derive: bool = False,
@@ -3820,166 +4080,57 @@ class SnapshotTable:
 
         A 0.1% DELETE against a date-clustered 100 TB table rewrites the
         handful of files whose zone maps admit the predicate — O(files
-        touched), not O(table). Commits validate ``based_on`` like
-        ``_rewrite_commit`` (same serializable isolation and retry
-        economics; the match scan re-derives on conflict).
+        touched), not O(table). The commit validates the snapshot the
+        match scan read and re-derives on a concurrent commit.
 
         Outstanding EQUALITY deletes pin the manifest-list prefix (their
         horizon rule), which a partial file replacement would violate —
-        that case falls back to the classic full rewrite, which
-        materializes them away (the documented invariant). Outstanding
-        POSITION deletes compose fine: touched files materialize theirs
-        into the rewritten images, untouched files keep theirs applying,
-        and entries naming replaced paths go inert."""
-        last: EngineError | None = None
-        for _ in range(self.commit_attempts):
-            snap = self.current_snapshot()
-            if snap is None:
-                raise EngineError(f"table {self.table_dir} has no snapshots")
+        that case falls back to the classic full rewrite
+        (:meth:`_rewrite_commit`), which materializes them away.
+        Outstanding POSITION deletes compose fine: touched files
+        materialize theirs into the rewritten images, untouched files
+        keep theirs applying."""
+
+        def stage(snap: Snapshot) -> _RowDelta | None:
             if snap.equality_deletes:
-                return self._rewrite_commit(derive, properties)
-            candidates = (
-                self.prune_files(snap, filters) if filters else list(snap.files)
+                return None
+            probe = self._match_frame(snap, filters)
+            hits = (
+                matcher(probe)
+                if callable(matcher)
+                else probe.filter(F.coalesce(matcher, F.lit(False)))
             )
-            touched: list[str] = []
-            if candidates:
-                sub = dataclasses.replace(snap, files=tuple(candidates))
-                probe = self._visible_rows_with_pos(sub)
-                hits = (
-                    matcher(probe)
-                    if callable(matcher)
-                    else probe.filter(F.coalesce(matcher, F.lit(False)))
-                )
-                touched = sorted(
-                    r[0]
-                    for r in hits.select(self._POS_FILE).distinct().collect()
-                )
-            new_files: list[str] = []
-            new_parts: dict = {}
-            stats_new: dict = {}
-            n_before = n_new = 0
-            if touched or always_derive:
+            touched = sorted(
+                r[0] for r in hits.select(self._POS_FILE).distinct().collect()
+            )
+            if not touched and not always_derive:
+                return _RowDelta("overwrite", snap, properties)
+            if touched:
+                vis = self._read_snapshot(
+                    dataclasses.replace(snap, files=tuple(touched))
+                ).persist()
+            else:
                 # always_derive (MERGE): the derive output may carry rows
                 # with NO matched file behind them (insert-only routes) —
                 # run it against an empty target frame so they still land
-                if touched:
-                    tsub = dataclasses.replace(snap, files=tuple(touched))
-                    vis = self._read_snapshot(tsub).persist()
-                elif snap.schema_columns is not None:
-                    vis = self.spark.createDataFrame(
-                        [],
-                        ", ".join(
-                            f"`{c['name']}` {c['type']}"
-                            for c in snap.schema_columns
-                        ),
-                    ).persist()
-                else:
-                    vis = self._read_snapshot(snap).limit(0).persist()
-                try:
-                    n_before = vis.count()
-                    out = derive(vis)
-                    cols = snap.schema_columns
-                    if cols is not None:
-                        out = out.select(
-                            *[
-                                F.col(c["name"]).cast(c["type"]).alias(c["name"])
-                                for c in cols
-                            ]
-                        )
-                    prev_specs = dict(snap.partition_specs or {})
-                    spec_id = snap.default_spec_id or 0
-                    spec = prev_specs.get(str(spec_id)) if spec_id else None
-                    new_files, new_parts, n_new, stats_new = self._stage_data_files(
-                        out, spec, spec_id, cols or []
-                    )
-                finally:
-                    vis.unpersist()
-                if n_new == 0 and len(touched) < len(snap.files):
-                    # every row in the touched files matched away and other
-                    # files remain: the touched files simply drop. (When the
-                    # whole table empties, the staged zero-row file is KEPT
-                    # so the snapshot stays readable — the same shape the
-                    # full-rewrite overwrite produced.)
-                    self._remove_quiet(new_files)
-                    new_files, new_parts, stats_new = [], {}, {}
-            touched_set = set(touched)
-
-            def build(prev: Snapshot | None) -> dict:
-                if (prev.snapshot_id if prev else None) != snap.snapshot_id:
-                    raise CommitConflictError(
-                        f"concurrent update on {self.table_dir}: this "
-                        f"copy-on-write rewrite matched against snapshot "
-                        f"{snap.snapshot_id} but the table advanced — "
-                        f"re-deriving"
-                    )
-                keep = [f for f in prev.files if f not in touched_set]
-                file_schemas = {
-                    f: s
-                    for f, s in (prev.file_schemas or {}).items()
-                    if f not in touched_set
-                }
-                file_schemas.update({f: prev.schema_id for f in new_files})
-                file_stats = {
-                    f: s
-                    for f, s in (prev.file_stats or {}).items()
-                    if f not in touched_set
-                }
-                file_stats.update(stats_new)
-                file_partitions = {
-                    f: p
-                    for f, p in (prev.file_partitions or {}).items()
-                    if f not in touched_set
-                }
-                file_partitions.update(new_parts)
-                # a rewritten file MATERIALIZES its outstanding position
-                # deletes into the new images — records whose targets are
-                # all gone drop; records still naming a retained file stay
-                # outstanding and keep applying (kilobyte metadata reads,
-                # cached per handle)
-                keep_set = set(keep)
-                pos_keep = [
-                    dfile
-                    for dfile in (prev.position_deletes or ())
-                    if self._pos_delete_targets([dfile]) & keep_set
-                ]
-                manifest = {
-                    "operation": "overwrite",
-                    "files": keep + new_files,
-                    "row_count": prev.row_count - n_before + n_new,
-                    "schema_id": prev.schema_id,
-                    "last_column_id": prev.last_column_id,
-                    "schemas": dict(prev.schemas or {}) or None,
-                    "file_schemas": file_schemas,
-                    "file_stats": file_stats,
-                    "properties": properties or {},
-                    "partition_specs": dict(prev.partition_specs or {}) or None,
-                    "default_spec_id": prev.default_spec_id,
-                    "file_partitions": file_partitions or None,
-                    "position_deletes": pos_keep or None,
-                    "equality_deletes": None,  # none outstanding on this path
-                }
-                if (
-                    not touched_set
-                    and not new_files
-                    and prev.manifest_list is not None
-                ):
-                    # nothing matched AND nothing staged: metadata-only
-                    # commit, reuse the parent's segment list verbatim.
-                    # (always_derive can stage new files — MERGE inserts —
-                    # with zero touched files; those MUST go through
-                    # segment prep or they'd vanish from the manifest.)
-                    manifest["manifest_list"] = list(prev.manifest_list)
-                return manifest
-
+                vis = probe.drop(self._POS_FILE, self._POS_IDX).limit(0)
             try:
-                return self._commit_version("main", build, max_attempts=1)
-            except CommitConflictError as exc:
-                self._remove_quiet(new_files)
-                last = exc
-        raise CommitConflictError(
-            f"copy-on-write rewrite on {self.table_dir} lost the validation "
-            f"race {self.commit_attempts} times — giving up"
-        ) from last
+                n_before = vis.count() if touched else 0
+                staged = self._stage_rows(snap, derive(vis))
+            finally:
+                vis.unpersist()
+            return _RowDelta(
+                "overwrite",
+                snap,
+                properties,
+                removed_files=frozenset(touched),
+                removed_rows=n_before,
+                **staged,
+            )
+
+        return self._row_level_commit(stage) or self._rewrite_commit(
+            derive, properties
+        )
 
     def merge(
         self,
@@ -4100,134 +4251,38 @@ class SnapshotTable:
         construction while every earlier same-key image dies — exactly
         Iceberg's Flink-upsert write shape. row_count stays exact via a
         key-column-pruned matched count validated against the scanned
-        snapshot (based_on; full re-derive on a concurrent commit)."""
-        key_df_raw = source.select(*key_cols).distinct()
-        last: EngineError | None = None
-        for _ in range(self.commit_attempts):
-            snap = self.current_snapshot()
-            if snap is None:
-                raise EngineError(f"table {self.table_dir} has no snapshots")
-            cols = snap.schema_columns
-            if cols is not None:
-                # cast keys to the table's DECLARED types, same as
-                # delete_by_key: a source whose key dtype differs (int vs
-                # bigint, string '01' vs int) would otherwise fail to
-                # match old images at read time, leaving stale rows
-                # visible after the upsert (round-10 advisor finding)
-                by_name = {c["name"]: c for c in cols}
-                missing = [c for c in key_cols if c not in by_name]
-                if missing:
-                    raise EngineError(
-                        f"merge key columns {missing} not in table "
-                        f"columns {sorted(by_name)} for {self.table_dir}"
-                    )
-                key_df = key_df_raw.select(
-                    *[
-                        F.col(c).cast(by_name[c]["type"]).alias(c)
-                        for c in key_cols
-                    ]
-                )
-            else:
-                key_df = key_df_raw
-            # stage the delete-keys file and the source data files; both
-            # are invisible until the manifest references them
-            new_deletes = self._stage_delete_files(key_df, key_cols, "eqdel")
+        snapshot (full re-derive on a concurrent commit)."""
+
+        def stage(snap: Snapshot) -> _RowDelta:
             src = source
-            if cols is not None:
+            if snap.schema_columns is not None:
                 # a column added by CONCURRENT evolution mid-retry exists
                 # in the table schema but not in the (entry-validated)
                 # source — upserted rows take NULL for it, the same
                 # allowMissingColumns semantics the copy-on-write path has
-                src_cols = set(source.columns)
+                have = set(source.columns)
                 src = source.select(
                     *[
-                        (
-                            F.col(c["name"])
-                            if c["name"] in src_cols
-                            else F.lit(None)
-                        )
+                        (F.col(c["name"]) if c["name"] in have else F.lit(None))
                         .cast(c["type"])
                         .alias(c["name"])
-                        for c in cols
+                        for c in snap.schema_columns
                     ]
                 )
-            prev_specs = dict(snap.partition_specs or {})
-            spec_id = snap.default_spec_id or 0
-            spec = prev_specs.get(str(spec_id)) if spec_id else None
-            new_files, new_parts, n_source, stats_new = self._stage_data_files(
-                src, spec, spec_id, cols or []
+            eq_file, n_matched = self._stage_equality_delete(
+                snap, source, key_cols, count=True
             )
-            # exact row_count: matched = visible rows whose key is upserted
-            # (null-safe, like the equality delete the commit carries)
-            vis_keys = self._read_snapshot(snap).select(*key_cols)
-            n_matched = vis_keys.join(
-                F.broadcast(key_df),
-                self._nullsafe_key_cond(vis_keys, key_df, key_cols),
-                "left_semi",
-            ).count()
-            if n_source == 0:  # empty source: a no-op upsert commits no files
-                self._remove_quiet(new_deletes + new_files)
-                new_deletes, new_files, new_parts, stats_new = [], [], {}, {}
+            return _RowDelta(
+                "merge",
+                snap,
+                properties,
+                removed_rows=n_matched,
+                equality_delete=eq_file,
+                key_cols=tuple(key_cols),
+                **self._stage_rows(snap, src),
+            )
 
-            def build(prev: Snapshot | None) -> dict:
-                if (prev.snapshot_id if prev else None) != snap.snapshot_id:
-                    raise CommitConflictError(
-                        f"concurrent update on {self.table_dir}: this "
-                        f"merge-on-read upsert staged against snapshot "
-                        f"{snap.snapshot_id} but the table advanced — "
-                        f"re-deriving"
-                    )
-                recs = []
-                if new_deletes:
-                    rec = {
-                        "file": new_deletes[0],
-                        "key_cols": list(key_cols),
-                        "segments": list(prev.manifest_list or ()),
-                    }
-                    if prev.manifest_list is None:
-                        rec["applies_files"] = list(prev.files)
-                    # field-id keying (Iceberg equality_ids) — see
-                    # delete_by_key
-                    key_ids = self._key_field_ids(prev, key_cols)
-                    if key_ids is not None:
-                        rec["key_ids"] = key_ids
-                    recs.append(rec)
-                file_schemas = dict(prev.file_schemas or {})
-                file_schemas.update({f: prev.schema_id for f in new_files})
-                file_stats = dict(prev.file_stats or {})
-                file_stats.update(stats_new)
-                file_partitions = dict(prev.file_partitions or {})
-                file_partitions.update(new_parts)
-                return {
-                    "operation": "merge",
-                    "files": list(prev.files) + new_files,
-                    "row_count": prev.row_count - n_matched + n_source,
-                    "schema_id": prev.schema_id,
-                    "last_column_id": prev.last_column_id,
-                    "schemas": dict(prev.schemas or {}) or None,
-                    "file_schemas": file_schemas,
-                    "file_stats": file_stats,
-                    "properties": properties or {},
-                    "partition_specs": dict(prev.partition_specs or {}) or None,
-                    "default_spec_id": prev.default_spec_id,
-                    "file_partitions": file_partitions or None,
-                    "position_deletes": list(prev.position_deletes or [])
-                    or None,
-                    "equality_deletes": (
-                        list(prev.equality_deletes or []) + recs
-                    )
-                    or None,
-                }
-
-            try:
-                return self._commit_version("main", build, max_attempts=1)
-            except CommitConflictError as exc:
-                self._remove_quiet(new_deletes + new_files)
-                last = exc
-        raise CommitConflictError(
-            f"merge-on-read upsert on {self.table_dir} lost the validation "
-            f"race {self.commit_attempts} times — giving up"
-        ) from last
+        return self._row_level_commit(stage)
 
     def delete_where(
         self, condition, properties=None, mode: str | None = None, filters=None
@@ -4249,7 +4304,10 @@ class SnapshotTable:
           in place; reads anti-join them (broadcast). A 0.1% DELETE on a
           100 TB table writes kilobytes instead of re-shuffling
           terabytes; ``compact_small_files`` materializes accrued
-          deletes away. Same CAS/based_on serializable isolation.
+          deletes away. Committed through :meth:`row_delta_commit`, so
+          the match scan is zone-map-pruned by ``filters`` and runs over
+          the VISIBLE rows (re-deleting dead positions never inflates
+          the delete set).
 
         Three-valued logic (found by tools/fuzz_dml.py): DELETE removes
         only rows where the condition IS TRUE — a NULL condition keeps
@@ -4257,39 +4315,42 @@ class SnapshotTable:
         rather than ``~cond`` (which is NULL for NULL and would silently
         drop those rows); the merge-on-read match filter is the same
         ``coalesce`` for the identical reason."""
-        from pyspark.sql import functions as F
-
         if mode is None:
             mode = self.table_properties().get(
                 "write.delete.mode", "copy-on-write"
             )
+        matched = F.coalesce(condition, F.lit(False))
         if mode == "merge-on-read":
-            return self._mor_delete(condition, properties, filters=filters)
+            return self.row_delta_commit(
+                lambda frame: (self._positions(frame.filter(matched)), None),
+                "delete",
+                properties,
+                filters,
+            )
         if mode != "copy-on-write":
             raise EngineError(
                 f"unknown delete mode {mode!r} (copy-on-write | merge-on-read)"
             )
-        # copy-on-write rewrites only the files CONTAINING matched rows
-        # (zone-map pre-pruned via ``filters`` when the caller extracted
-        # prunable conjuncts); untouched files carry forward by reference
         return self._cow_touched_rewrite(
-            condition,
-            lambda cur: cur.filter(~F.coalesce(condition, F.lit(False))),
-            filters,
-            properties,
+            condition, lambda cur: cur.filter(~matched), filters, properties
         )
 
     def _stage_delete_files(
         self, rows: DataFrame, sort_cols: list[str], prefix: str
-    ) -> list[str]:
+    ) -> tuple[list[str], int]:
         """Write ``rows`` as ONE sorted delete parquet under data/ and
-        return its relative path in a list. One file per DML commit:
-        delete sets are small by design (a production writer would
-        target delete-file size and split on it), sorted for locality.
-        Invisible until a manifest references it — a lost commit
-        reclaims it; a crash leaves it to the age-floored orphan
-        sweep. Shared by position deletes (_mor_delete/_mor_update)
-        and equality deletes (delete_by_key)."""
+        return ([its relative path], its row count). The count is read
+        from the parquet footer, which is exact, so no Spark job re-reads
+        the file. A file of zero rows is never moved into data/ and
+        ([], 0) comes back: an empty delete file is never committed. One
+        file per DML commit: delete sets are small by design (a
+        production writer would target delete-file size and split on
+        it), sorted for locality. Invisible until a manifest references
+        it — a lost commit reclaims it; a crash leaves it to the
+        age-floored orphan sweep. Shared by position deletes and
+        equality deletes."""
+        import pyarrow.parquet as pq
+
         staging = os.path.join(self.table_dir, f"_staging_{uuid.uuid4().hex}")
         (
             rows.coalesce(1)
@@ -4299,15 +4360,19 @@ class SnapshotTable:
         )
         commit_uuid = uuid.uuid4().hex[:12]
         out: list[str] = []
+        n_rows = 0
         for fn in sorted(os.listdir(staging)):
             if fn.endswith(".parquet"):
+                src = os.path.join(staging, fn)
+                n = pq.ParquetFile(src).metadata.num_rows
+                if n == 0:
+                    continue
                 dest = f"data/{prefix}-{commit_uuid}-{len(out):05d}.parquet"
-                shutil.move(
-                    os.path.join(staging, fn), os.path.join(self.table_dir, dest)
-                )
+                shutil.move(src, os.path.join(self.table_dir, dest))
                 out.append(dest)
+                n_rows += n
         shutil.rmtree(staging, ignore_errors=True)
-        return out
+        return out, n_rows
 
     def _remove_quiet(self, rel_files) -> None:
         """Best-effort unlink of table-relative files (already-gone is
@@ -4317,91 +4382,6 @@ class SnapshotTable:
                 os.remove(os.path.join(self.table_dir, f))
             except OSError:
                 pass
-
-    def _mor_delete(self, condition, properties=None, filters=None) -> Snapshot:
-        """Merge-on-read DELETE: commit position-delete files against the
-        snapshot the match scan read (``based_on`` validation — a
-        concurrent commit means the positions may be stale, so the whole
-        match-and-write re-derives, the same retry economics as
-        ``_rewrite_commit``). Matching runs over the VISIBLE rows
-        (existing deletes applied), so re-deleting already-dead positions
-        never inflates the delete set.
-
-        ``filters`` (conjuncts or DNF implied by ``condition`` — the
-        caller owns soundness) zone-map-prune the MATCH SCAN (round 15):
-        files whose stats exclude every disjunct can hold no matching
-        row, so a selective MOR DELETE on a key-clustered 100 TB table
-        scans the key band, not the table — the same pruning the CoW
-        path and SQL MERGE already had."""
-        last: EngineError | None = None
-        for _ in range(self.commit_attempts):
-            snap = self.current_snapshot()
-            if snap is None:
-                raise EngineError(f"table {self.table_dir} has no snapshots")
-            df = self._pruned_pos_probe(snap, filters)
-            matches = df.filter(F.coalesce(condition, F.lit(False)))
-            new_deletes = self._stage_delete_files(
-                matches.select(
-                    F.col(self._POS_FILE).alias("file_path"),
-                    F.col(self._POS_IDX).alias("pos"),
-                ),
-                ["file_path", "pos"],
-                "del",
-            )
-            n_deleted = 0
-            if new_deletes:
-                n_deleted = self.spark.read.parquet(
-                    *[os.path.join(self.table_dir, f) for f in new_deletes]
-                ).count()
-            if n_deleted == 0:  # nothing matched: commit no (empty) delete file
-                self._remove_quiet(new_deletes)
-                new_deletes = []
-
-            def build(prev: Snapshot | None) -> dict:
-                if (prev.snapshot_id if prev else None) != snap.snapshot_id:
-                    raise CommitConflictError(
-                        f"concurrent update on {self.table_dir}: this "
-                        f"merge-on-read delete matched against snapshot "
-                        f"{snap.snapshot_id} but the table advanced — "
-                        f"re-deriving"
-                    )
-                return {
-                    "operation": "delete",
-                    "files": list(prev.files),
-                    "row_count": prev.row_count - n_deleted,
-                    "schema_id": prev.schema_id,
-                    "last_column_id": prev.last_column_id,
-                    "schemas": dict(prev.schemas or {}) or None,
-                    "file_schemas": dict(prev.file_schemas or {}),
-                    "file_stats": dict(prev.file_stats or {}),
-                    "properties": properties or {},
-                    "partition_specs": dict(prev.partition_specs or {}) or None,
-                    "default_spec_id": prev.default_spec_id,
-                    "file_partitions": dict(prev.file_partitions or {}) or None,
-                    "position_deletes": (
-                        list(prev.position_deletes or []) + new_deletes
-                    )
-                    or None,
-                    "equality_deletes": list(prev.equality_deletes or [])
-                    or None,
-                    # file entries are untouched — reuse the parent's
-                    # segment list verbatim: a MOR delete is a
-                    # metadata+delete-file commit, O(1) in table file count
-                    "manifest_list": list(prev.manifest_list)
-                    if prev is not None and prev.manifest_list is not None
-                    else None,
-                }
-
-            try:
-                return self._commit_version("main", build, max_attempts=1)
-            except CommitConflictError as exc:
-                # stale positions — reclaim and re-derive
-                self._remove_quiet(new_deletes)
-                last = exc
-        raise CommitConflictError(
-            f"merge-on-read delete on {self.table_dir} lost the validation "
-            f"race {self.commit_attempts} times — giving up"
-        ) from last
 
     def delete_by_key(
         self,
@@ -4434,117 +4414,26 @@ class SnapshotTable:
         a delete column matches rows where that column IS NULL (a key
         row ``(4, NULL)`` deletes rows with ``id = 4 AND category IS
         NULL``), exactly as Trino/Flink read Iceberg v2 equality
-        deletes. Duplicate key rows are deduplicated."""
+        deletes. Duplicate key rows are deduplicated; an empty key set
+        raises :class:`EngineError`."""
         key_cols = list(key_cols or keys.columns)
-        want = self.schema_columns
-        if want is not None:
-            by_name = {c["name"]: c for c in want}
-            missing = [c for c in key_cols if c not in by_name]
-            if missing:
-                raise EngineError(
-                    f"delete_by_key key columns {missing} not in table "
-                    f"columns {sorted(by_name)} for {self.table_dir}"
-                )
-            # cast to the declared types so the read-path equality join
-            # compares like against like
-            key_df = keys.select(
-                *[F.col(c).cast(by_name[c]["type"]).alias(c) for c in key_cols]
-            ).distinct()
-        else:
-            key_df = keys.select(*key_cols).distinct()
 
-        last: EngineError | None = None
-        for _ in range(self.commit_attempts):
-            snap = self.current_snapshot()
-            if snap is None:
-                raise EngineError(f"table {self.table_dir} has no snapshots")
-            staged = self._stage_delete_files(key_df, key_cols, "eqdel")
-            if not staged:
+        def stage(snap: Snapshot) -> _RowDelta:
+            eq_file, n_matched = self._stage_equality_delete(
+                snap, keys, key_cols, count=count_matches
+            )
+            if eq_file is None:
                 raise EngineError("empty key set for delete_by_key")
-            del_file = staged[0]
-            n_deleted = 0
-            if count_matches:
-                # key-column projection only: parquet column pruning makes
-                # this orders cheaper than the rewrite it replaces; the
-                # semi-join is null-safe to count exactly what the read
-                # path's null-safe anti-join will drop
-                visible = self._read_snapshot(snap).select(*key_cols)
-                n_deleted = visible.join(
-                    F.broadcast(key_df),
-                    self._nullsafe_key_cond(visible, key_df, key_cols),
-                    "left_semi",
-                ).count()
+            return _RowDelta(
+                "delete",
+                snap if count_matches else None,
+                properties,
+                removed_rows=n_matched,
+                equality_delete=eq_file,
+                key_cols=tuple(key_cols),
+            )
 
-            def build(prev: Snapshot | None) -> dict:
-                if count_matches and (
-                    prev.snapshot_id if prev else None
-                ) != snap.snapshot_id:
-                    raise CommitConflictError(
-                        f"concurrent update on {self.table_dir}: this "
-                        f"equality delete counted against snapshot "
-                        f"{snap.snapshot_id} but the table advanced — "
-                        f"re-deriving"
-                    )
-                if prev is None:
-                    raise EngineError(
-                        f"table {self.table_dir} has no snapshots"
-                    )
-                rec = {
-                    "file": del_file,
-                    "key_cols": key_cols,
-                    # the applies-to horizon is the head AT COMMIT TIME
-                    # (build re-runs against the refreshed head on every
-                    # retry), so a racing append that serializes first is
-                    # correctly covered — Iceberg's smaller-sequence rule
-                    "segments": list(prev.manifest_list or ()),
-                }
-                # Iceberg's equality_ids: keys resolve by FIELD ID at read
-                # time so a rename of a key column can't brick reads and a
-                # re-added same-name column can't resurrect deleted rows
-                # (round-10 judge repro).
-                key_ids = self._key_field_ids(prev, key_cols)
-                if key_ids is not None:
-                    rec["key_ids"] = key_ids
-                if prev.manifest_list is None:
-                    # legacy inline-manifest head: no segments to anchor
-                    # the horizon — pin the applicable files explicitly
-                    # (stays correct after the table migrates to v2)
-                    rec["applies_files"] = list(prev.files)
-                return {
-                    "operation": "delete",
-                    "files": list(prev.files),
-                    "row_count": prev.row_count - n_deleted,
-                    "schema_id": prev.schema_id,
-                    "last_column_id": prev.last_column_id,
-                    "schemas": dict(prev.schemas or {}) or None,
-                    "file_schemas": dict(prev.file_schemas or {}),
-                    "file_stats": dict(prev.file_stats or {}),
-                    "properties": properties or {},
-                    "partition_specs": dict(prev.partition_specs or {}) or None,
-                    "default_spec_id": prev.default_spec_id,
-                    "file_partitions": dict(prev.file_partitions or {}) or None,
-                    "position_deletes": list(prev.position_deletes or [])
-                    or None,
-                    "equality_deletes": list(prev.equality_deletes or [])
-                    + [rec],
-                    "manifest_list": list(prev.manifest_list)
-                    if prev.manifest_list is not None
-                    else None,
-                }
-
-            try:
-                return self._commit_version(
-                    "main", build, max_attempts=1 if count_matches else None
-                )
-            except CommitConflictError as exc:
-                self._remove_quiet([del_file])
-                if not count_matches:
-                    raise  # blind mode exhausted _commit_version's budget
-                last = exc
-        raise CommitConflictError(
-            f"equality delete on {self.table_dir} lost the validation "
-            f"race {self.commit_attempts} times — giving up"
-        ) from last
+        return self._row_level_commit(stage)
 
     def update_where(
         self,
@@ -4564,29 +4453,42 @@ class SnapshotTable:
           via ``filters`` — _cow_touched_rewrite); untouched files carry
           forward by reference; validated against the read snapshot and
           retried on concurrent commits;
-        - ``merge-on-read`` (Iceberg v2): ONE commit that position-deletes
-          the matched rows and appends new data files holding their
-          updated images — a 0.1% UPDATE on a 100 TB table touches the
-          matched rows' worth of data, not the table. Same based_on
-          serializable isolation; new files land under the current
-          partition spec like any commit."""
-        from pyspark.sql import functions as F
-
+        - ``merge-on-read`` (Iceberg v2): ONE :meth:`row_delta_commit`
+          that position-deletes the matched rows and appends new data
+          files holding their updated images — a 0.1% UPDATE on a 100 TB
+          table touches the matched rows' worth of data, not the table.
+          Row count is unchanged by construction; new files land under
+          the current partition spec like any commit."""
         if mode is None:
             mode = self.table_properties().get(
                 "write.update.mode", "copy-on-write"
             )
         if mode == "merge-on-read":
-            return self._mor_update(
-                condition, assignments, properties, filters=filters
-            )
+            held: list[DataFrame] = []
+
+            def plan(frame: DataFrame):
+                # the match feeds TWO staging jobs (delete file, new
+                # images) — persist it so the snapshot read, delete
+                # anti-joins and condition filter run once, not twice
+                matched = frame.filter(
+                    F.coalesce(condition, F.lit(False))
+                ).persist()
+                held.append(matched)
+                updated = matched.withColumns(dict(assignments))
+                return (
+                    self._positions(matched),
+                    updated.drop(self._POS_FILE, self._POS_IDX),
+                )
+
+            try:
+                return self.row_delta_commit(plan, "update", properties, filters)
+            finally:
+                for m in held:
+                    m.unpersist()
         if mode != "copy-on-write":
             raise EngineError(
                 f"unknown update mode {mode!r} (copy-on-write | merge-on-read)"
             )
-        # copy-on-write rewrites only the files CONTAINING matched rows
-        # (zone-map pre-pruned via ``filters``); untouched files carry
-        # forward by reference
         return self._cow_touched_rewrite(
             condition,
             lambda cur: cur.withColumns(
@@ -4598,130 +4500,6 @@ class SnapshotTable:
             filters,
             properties,
         )
-
-    def _pruned_pos_probe(self, snap: Snapshot, filters) -> DataFrame:
-        """The MOR match-scan frame: visible rows with position columns,
-        zone-map-pruned to the files ``filters`` admit (round 15 — a
-        selective DML's match scan reads the key band, not the table).
-        No filters → the full visible frame; filters excluding every
-        file → an empty frame with the same schema (limit(0) plan, no
-        file is read)."""
-        if not filters:
-            return self._visible_rows_with_pos(snap)
-        cand = self.prune_files(snap, filters)
-        if not cand:
-            return self._visible_rows_with_pos(snap).limit(0)
-        return self._visible_rows_with_pos(
-            dataclasses.replace(snap, files=tuple(cand))
-        )
-
-    def _mor_update(
-        self, condition, assignments: dict, properties=None, filters=None
-    ) -> Snapshot:
-        """Merge-on-read UPDATE: position-delete the matched rows' old
-        images and append data files with their new images, committed as
-        ONE snapshot (readers see either every update or none). Matching
-        runs over the visible rows against the snapshot the scan read
-        (``based_on``); a concurrent commit re-derives everything, same
-        retry economics as ``_rewrite_commit``. Row count is unchanged by
-        construction. ``filters`` zone-map-prune the match scan exactly
-        as in :meth:`_mor_delete` (round 15)."""
-        last: EngineError | None = None
-        for _ in range(self.commit_attempts):
-            snap = self.current_snapshot()
-            if snap is None:
-                raise EngineError(f"table {self.table_dir} has no snapshots")
-            df = self._pruned_pos_probe(snap, filters)
-            # the match scan feeds TWO jobs (delete-file write, new-image
-            # staging) — persist it so the snapshot read + delete
-            # anti-joins + condition filter run once, not twice per
-            # attempt
-            matched = df.filter(F.coalesce(condition, F.lit(False))).persist()
-            try:
-                # old images → one position-delete file
-                new_deletes = self._stage_delete_files(
-                    matched.select(
-                        F.col(self._POS_FILE).alias("file_path"),
-                        F.col(self._POS_IDX).alias("pos"),
-                    ),
-                    ["file_path", "pos"],
-                    "del",
-                )
-                # new images → ordinary data files under the current spec
-                cols = snap.schema_columns
-                updated = matched.withColumns(
-                    {col: expr for col, expr in assignments.items()}
-                )
-                if cols is not None:
-                    # cast assigned columns back to their DECLARED types so
-                    # the new files share one physical parquet schema with
-                    # the retained files (a mixed int/long column across
-                    # files in one schema group would break the grouped
-                    # read)
-                    updated = updated.select(
-                        *[
-                            F.col(c["name"]).cast(c["type"]).alias(c["name"])
-                            for c in cols
-                        ]
-                    )
-                else:  # legacy table: original columns, positional
-                    updated = updated.select(*df.columns[:-2])
-                prev_specs = dict(snap.partition_specs or {})
-                spec_id = snap.default_spec_id or 0
-                spec = prev_specs.get(str(spec_id)) if spec_id else None
-                new_files, new_parts, n_updated, stats_new = self._stage_data_files(
-                    updated, spec, spec_id, cols or []
-                )
-            finally:
-                matched.unpersist()
-            if n_updated == 0:  # nothing matched: no delete file, no data
-                self._remove_quiet(new_deletes + new_files)
-                new_deletes, new_files, new_parts, stats_new = [], [], {}, {}
-
-            def build(prev: Snapshot | None) -> dict:
-                if (prev.snapshot_id if prev else None) != snap.snapshot_id:
-                    raise CommitConflictError(
-                        f"concurrent update on {self.table_dir}: this "
-                        f"merge-on-read update matched against snapshot "
-                        f"{snap.snapshot_id} but the table advanced — "
-                        f"re-deriving"
-                    )
-                file_schemas = dict(prev.file_schemas or {})
-                file_schemas.update({f: prev.schema_id for f in new_files})
-                file_stats = dict(prev.file_stats or {})
-                file_stats.update(stats_new)
-                file_partitions = dict(prev.file_partitions or {})
-                file_partitions.update(new_parts)
-                return {
-                    "operation": "update",
-                    "files": list(prev.files) + new_files,
-                    "row_count": prev.row_count,  # delete n + insert n
-                    "schema_id": prev.schema_id,
-                    "last_column_id": prev.last_column_id,
-                    "schemas": dict(prev.schemas or {}) or None,
-                    "file_schemas": file_schemas,
-                    "file_stats": file_stats,
-                    "properties": properties or {},
-                    "partition_specs": dict(prev.partition_specs or {}) or None,
-                    "default_spec_id": prev.default_spec_id,
-                    "file_partitions": file_partitions or None,
-                    "position_deletes": (
-                        list(prev.position_deletes or []) + new_deletes
-                    )
-                    or None,
-                    "equality_deletes": list(prev.equality_deletes or [])
-                    or None,
-                }
-
-            try:
-                return self._commit_version("main", build, max_attempts=1)
-            except CommitConflictError as exc:
-                self._remove_quiet(new_deletes + new_files)
-                last = exc
-        raise CommitConflictError(
-            f"merge-on-read update on {self.table_dir} lost the validation "
-            f"race {self.commit_attempts} times — giving up"
-        ) from last
 
     def row_delta_commit(
         self, plan, operation: str = "merge", properties=None, filters=None
@@ -4744,14 +4522,14 @@ class SnapshotTable:
           pure delete.
 
         Matching ran against the snapshot the scan read, so the commit
-        validates ``based_on`` and the whole plan re-derives on a
-        concurrent commit — _rewrite_commit's retry economics at
-        O(changed rows) instead of O(table) write cost. This is what the
-        SQL MERGE arm commits under ``write.merge.mode=merge-on-read``:
-        a 0.1% CDC upsert against a 100 TB table writes kilobytes of
-        delete files plus the changed images, never a table rewrite.
-        Untouched data files survive by IDENTITY (same path, same file)
-        in the child snapshot.
+        validates it and the whole plan re-derives on a concurrent
+        commit — _rewrite_commit's retry economics at O(changed rows)
+        instead of O(table) write cost. This is what the SQL MERGE arm
+        commits under ``write.merge.mode=merge-on-read``, and what
+        merge-on-read DELETE and UPDATE commit: a 0.1% CDC upsert against
+        a 100 TB table writes kilobytes of delete files plus the changed
+        images, never a table rewrite. Untouched data files survive by
+        IDENTITY (same path, same file) in the child snapshot.
 
         ``filters`` (``(col, op, literal)`` conjuncts — or a DNF list of
         conjunct lists, see _filters_as_dnf — IMPLIED BY the
@@ -4759,121 +4537,29 @@ class SnapshotTable:
         zone-map-prune the files the plan frame reads: rows outside the
         pruned set can never be matched, deleted or consulted, so the
         match scan costs the key band's worth of data, not the table.
-        The caller owns soundness (a filter must be a necessary
-        condition for a row to MATTER to the plan)."""
-        last: EngineError | None = None
-        for _ in range(self.commit_attempts):
-            snap = self.current_snapshot()
-            if snap is None:
-                raise EngineError(f"table {self.table_dir} has no snapshots")
-            if filters and snap.schema_columns is not None:
-                cand = self.prune_files(snap, filters)
-                if cand:
-                    frame = self._visible_rows_with_pos(
-                        dataclasses.replace(snap, files=tuple(cand))
-                    )
-                else:
-                    # no file can hold a matching row: an EMPTY plan
-                    # frame (with the position identity columns) — the
-                    # plan still runs so pure-insert routes land
-                    frame = self.spark.createDataFrame(
-                        [],
-                        ", ".join(
-                            f"`{c['name']}` {c['type']}"
-                            for c in snap.schema_columns
-                        )
-                        + f", `{self._POS_FILE}` string, `{self._POS_IDX}` bigint",
-                    )
-            else:
-                frame = self._visible_rows_with_pos(snap)
-            del_pos, appends = plan(frame)
-            new_deletes: list[str] = []
-            n_deleted = 0
+        When no file survives, the plan still runs on an empty frame so
+        pure-insert routes land. The caller owns soundness (a filter
+        must be a necessary condition for a row to MATTER to the
+        plan)."""
+
+        def stage(snap: Snapshot) -> _RowDelta:
+            del_pos, appends = plan(self._match_frame(snap, filters))
+            deletes, n_deleted = [], 0
             if del_pos is not None:
-                new_deletes = self._stage_delete_files(
+                deletes, n_deleted = self._stage_delete_files(
                     del_pos.select("file_path", "pos"), ["file_path", "pos"], "del"
                 )
-                if new_deletes:
-                    n_deleted = self.spark.read.parquet(
-                        *[os.path.join(self.table_dir, f) for f in new_deletes]
-                    ).count()
-                if n_deleted == 0:  # nothing matched: no empty delete file
-                    self._remove_quiet(new_deletes)
-                    new_deletes = []
-            cols = snap.schema_columns
-            new_files: list[str] = []
-            new_parts: dict = {}
-            n_appended = 0
-            stats_new: dict = {}
-            if appends is not None:
-                out = appends
-                if cols is not None:
-                    out = appends.select(
-                        *[
-                            F.col(c["name"]).cast(c["type"]).alias(c["name"])
-                            for c in cols
-                        ]
-                    )
-                prev_specs = dict(snap.partition_specs or {})
-                spec_id = snap.default_spec_id or 0
-                spec = prev_specs.get(str(spec_id)) if spec_id else None
-                new_files, new_parts, n_appended, stats_new = self._stage_data_files(
-                    out, spec, spec_id, cols or []
-                )
-                if n_appended == 0:  # empty append side: no empty files
-                    self._remove_quiet(new_files)
-                    new_files, new_parts, stats_new = [], {}, {}
+            added = self._stage_rows(snap, appends) if appends is not None else {}
+            return _RowDelta(
+                operation,
+                snap,
+                properties,
+                removed_rows=n_deleted,
+                position_deletes=tuple(deletes),
+                **added,
+            )
 
-            def build(prev: Snapshot | None) -> dict:
-                if (prev.snapshot_id if prev else None) != snap.snapshot_id:
-                    raise CommitConflictError(
-                        f"concurrent update on {self.table_dir}: this "
-                        f"row-delta commit matched against snapshot "
-                        f"{snap.snapshot_id} but the table advanced — "
-                        f"re-deriving"
-                    )
-                file_schemas = dict(prev.file_schemas or {})
-                file_schemas.update({f: prev.schema_id for f in new_files})
-                file_stats = dict(prev.file_stats or {})
-                file_stats.update(stats_new)
-                file_partitions = dict(prev.file_partitions or {})
-                file_partitions.update(new_parts)
-                manifest = {
-                    "operation": operation,
-                    "files": list(prev.files) + new_files,
-                    "row_count": prev.row_count - n_deleted + n_appended,
-                    "schema_id": prev.schema_id,
-                    "last_column_id": prev.last_column_id,
-                    "schemas": dict(prev.schemas or {}) or None,
-                    "file_schemas": file_schemas,
-                    "file_stats": file_stats,
-                    "properties": properties or {},
-                    "partition_specs": dict(prev.partition_specs or {}) or None,
-                    "default_spec_id": prev.default_spec_id,
-                    "file_partitions": file_partitions or None,
-                    "position_deletes": (
-                        list(prev.position_deletes or []) + new_deletes
-                    )
-                    or None,
-                    "equality_deletes": list(prev.equality_deletes or [])
-                    or None,
-                }
-                if not new_files and prev.manifest_list is not None:
-                    # pure delete route: file entries untouched — reuse
-                    # the parent's segment list verbatim (O(1) in table
-                    # file count, same as _mor_delete)
-                    manifest["manifest_list"] = list(prev.manifest_list)
-                return manifest
-
-            try:
-                return self._commit_version("main", build, max_attempts=1)
-            except CommitConflictError as exc:
-                self._remove_quiet(new_deletes + new_files)
-                last = exc
-        raise CommitConflictError(
-            f"row-delta commit on {self.table_dir} lost the validation "
-            f"race {self.commit_attempts} times — giving up"
-        ) from last
+        return self._row_level_commit(stage)
 
     # -- maintenance -----------------------------------------------------
     def expire_snapshots(self, older_than: dt.datetime | None = None, retain_last: int = 1) -> int:
@@ -4959,9 +4645,9 @@ class SnapshotTable:
         anti-join instead of one per commit, at the cost of one
         key-column scan — not the full-table rewrite
         ``compact_small_files`` pays. Returns None when nothing is
-        outstanding. Validated against the scanned snapshot (based_on);
-        re-runnable, so no internal retry loop (same policy as the other
-        maintenance rewrites)."""
+        outstanding. Validated against the scanned snapshot; re-runnable,
+        so no internal retry loop (same policy as the other maintenance
+        rewrites): a concurrent commit raises CommitConflictError."""
         snap = self.current_snapshot()
         if snap is None or not (
             snap.equality_deletes or len(snap.position_deletes or ()) > 1
@@ -4974,60 +4660,25 @@ class SnapshotTable:
             self._POS_FILE, self._POS_IDX
         )
         dead = raw.join(visible, [self._POS_FILE, self._POS_IDX], "left_anti")
-        new_deletes = self._stage_delete_files(
-            dead.select(
-                F.col(self._POS_FILE).alias("file_path"),
-                F.col(self._POS_IDX).alias("pos"),
-            ),
-            ["file_path", "pos"],
-            "del",
-        )
         # An outstanding delete that matched nothing (e.g. an equality
         # delete whose keys were never present) consolidates to ZERO dead
-        # rows — commit no delete file at all rather than a permanent
-        # empty one that forces the MOR anti-join on every later read
-        # (round-10 advisor finding).
-        if new_deletes and (
-            self.spark.read.parquet(
-                *[os.path.join(self.table_dir, f) for f in new_deletes]
-            ).count()
-            == 0
-        ):
-            self._remove_quiet(new_deletes)
-            new_deletes = []
-
-        def build(prev: Snapshot | None) -> dict:
-            if (prev.snapshot_id if prev else None) != snap.snapshot_id:
-                raise CommitConflictError(
-                    f"concurrent update on {self.table_dir}: delete-file "
-                    f"rewrite derived from snapshot {snap.snapshot_id} but "
-                    f"the table advanced — re-run the maintenance pass"
-                )
-            return {
-                "operation": "rewrite-deletes",
-                "files": list(prev.files),
-                "row_count": prev.row_count,
-                "schema_id": prev.schema_id,
-                "last_column_id": prev.last_column_id,
-                "schemas": dict(prev.schemas or {}) or None,
-                "file_schemas": dict(prev.file_schemas or {}),
-                "file_stats": dict(prev.file_stats or {}),
-                "properties": {"rewrote_delete_files": "true"},
-                "partition_specs": dict(prev.partition_specs or {}) or None,
-                "default_spec_id": prev.default_spec_id,
-                "file_partitions": dict(prev.file_partitions or {}) or None,
-                "position_deletes": new_deletes or None,
-                "equality_deletes": None,
-                "manifest_list": list(prev.manifest_list)
-                if prev.manifest_list is not None
-                else None,
-            }
-
-        try:
-            return self._commit_version("main", build, max_attempts=1)
-        except CommitConflictError:
-            self._remove_quiet(new_deletes)
-            raise
+        # rows — no delete file is committed at all rather than a
+        # permanent empty one that forces the MOR anti-join on every later
+        # read (round-10 advisor finding).
+        deletes, _ = self._stage_delete_files(
+            self._positions(dead), ["file_path", "pos"], "del"
+        )
+        outstanding = list(snap.position_deletes or ())
+        outstanding += [r["file"] for r in snap.equality_deletes or ()]
+        return self._commit_row_delta(
+            _RowDelta(
+                "rewrite-deletes",
+                snap,
+                {"rewrote_delete_files": "true"},
+                position_deletes=tuple(deletes),
+                removed_deletes=frozenset(outstanding),
+            )
+        )
 
     def compact_small_files(self, target_files: int | None = None) -> Snapshot | None:
         """Iceberg ``rewrite_data_files`` analog: rewrite the current

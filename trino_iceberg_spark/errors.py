@@ -56,5 +56,6 @@ class SchemaMismatchError(EngineError):
     """A data commit's columns do not match the table's current schema.
     On a direct append this is a caller error (evolve the schema first);
     inside a read-modify-write commit it can only mean concurrent
-    evolution between the read and the staging write, so
-    ``_rewrite_commit`` treats it as retryable."""
+    evolution between the read and the staging write, so the full-table
+    copy-on-write rewrite (``SnapshotTable._rewrite_commit``, taken while
+    equality deletes are outstanding) treats it as retryable."""

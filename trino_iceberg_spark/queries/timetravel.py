@@ -1564,7 +1564,8 @@ def tt31_sql_merge_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def tt32_cow_selective_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round 14 — copy-on-write UPDATE/DELETE that rewrites only TOUCHED
-    files (catalog.snapshots._cow_touched_rewrite): the table commits
+    files (catalog.snapshots._cow_touched_rewrite, one row delta that
+    replaces the touched files): the table commits
     key-clustered (tight per-file l_orderkey zone maps), the SQL arm
     extracts (col, op, literal) conjuncts from each WHERE
     (client._extract_prune_filters) to prune candidates at the manifest
