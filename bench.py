@@ -28,6 +28,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from trino_iceberg_spark.operators.cachectl import CacheRegistry  # noqa: E402
 from trino_iceberg_spark.queries.registry import QUERIES, load_all  # noqa: E402
 from trino_iceberg_spark.session import get_spark  # noqa: E402
 
@@ -141,16 +142,20 @@ def main() -> None:
             both: dict[str, list[float]] = {}
             for name in names:
                 ts: list[float] = []
-                for i in range(2):
-                    # Label every job with its query (guide §1.5) so an
-                    # event log / UI maps stages back to bench entries;
-                    # descriptions are metadata only, no timing effect.
-                    spark.sparkContext.setJobDescription(f"{name} pass{i}")
-                    t0 = time.time()
-                    df = QUERIES[name](spark, SF_DIR)
-                    df.write.format("noop").mode("overwrite").save()
-                    ts.append(round(time.time() - t0, 3))
-                spark.sparkContext.setJobDescription(None)
+                # One query scope per query: its exit (untimed) logs any
+                # skew-guard report and frees both passes' pins and
+                # checkpoint blocks, which clearCache() cannot reach.
+                with CacheRegistry():
+                    for i in range(2):
+                        # Label every job with its query (guide §1.5) so an
+                        # event log / UI maps stages back to bench entries;
+                        # descriptions are metadata only, no timing effect.
+                        spark.sparkContext.setJobDescription(f"{name} pass{i}")
+                        t0 = time.time()
+                        df = QUERIES[name](spark, SF_DIR)
+                        df.write.format("noop").mode("overwrite").save()
+                        ts.append(round(time.time() - t0, 3))
+                    spark.sparkContext.setJobDescription(None)
                 both[name] = ts
                 best[name] = min(ts)
                 # Measurement-isolation fix (round 16, documented in

@@ -111,89 +111,174 @@ def test_lsh_bucket_size_guard_drops_viral_buckets_sizing_first(spark):
     assert len(unguarded) == 45 + 1
 
 
-def test_lazy_skew_report_fires_without_extra_job(spark, caplog):
-    """Round 17 (VERDICT r16 #8): with eager_diagnostics=False the skew
-    guard's recall-loss report runs OFF the query path — plan
-    construction runs no report job, the caller's plan is untouched (a
-    CollectMetrics observation was measured flipping the pair join to
-    sort-merge, diagnostics.py), and the warning fires from an async
-    micro-job over the materialized checkpoint after the caller's own
-    action."""
-    import logging as _logging
-    import time as _time
-
-    import trino_iceberg_spark.operators.diagnostics as diag
-    import trino_iceberg_spark.operators.similarity as S
-
-    # ids chosen so the two seeded centroids span both directions
-    # (xxhash64(id+42) ascending picks 157 then 142 from this id set) and
-    # the small cell survives the guard while the viral one is dropped
+def _viral_cell_corpus(spark):
+    """24 unit vectors in 2 seeded cells: ids chosen so the two seeded
+    centroids span both directions (xxhash64(id+42) ascending picks 157
+    then 142 from this id set) and, at ``max_cell_size=5``, the small
+    cell survives the guard while the 21-row viral one is dropped."""
     rows = [(i, [1.0, 0.0]) for i in range(20)] + [(142, [1.0, 0.0])] + [
         (157 + i, [0.0, 1.0]) for i in range(3)
     ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    tracker = spark.sparkContext.statusTracker()
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    def n_jobs():
-        return len(tracker.getJobIdsForGroup() or [])
 
-    jobs_before = n_jobs()
-    out = S.semantic_dedup_pairs(
-        df, "embedding", "vec_id", threshold=0.9, num_cells=2,
-        max_cell_size=5, eager_diagnostics=False,
-    )
-    build_jobs = n_jobs() - jobs_before
-    # lazy builder: only the inherent centroid collect runs at build time,
-    # no dropped-cell report job (the eager path runs one more)
-    assert build_jobs <= 1
-    pollers = list(diag._LIVE_POLLERS)
+def _jobs(spark) -> int:
+    """Jobs run so far outside any job group."""
+    return len(spark.sparkContext.statusTracker().getJobIdsForGroup() or [])
+
+
+def _cached_rdds(spark) -> set[int]:
+    """Ids of the RDDs holding cached blocks (a block-manager metadata
+    call, no job). Compared as sets, so a ContextCleaner sweep of some
+    earlier test's blocks cannot flip an assertion."""
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_lazy_skew_report_fires_without_extra_job(spark, caplog):
+    """The skew guard's recall-loss report runs off the query path:
+    building runs no report job, the caller's plan is untouched (a
+    CollectMetrics observation was measured flipping the pair join to
+    sort-merge), and the warning is logged synchronously when the query
+    scope exits, over the checkpoint the caller's own action
+    materialized."""
+    import logging as _logging
+
+    from trino_iceberg_spark.operators.cachectl import CacheRegistry
+
+    df = _viral_cell_corpus(spark)
     with caplog.at_level(_logging.WARNING, logger="trino_iceberg_spark.operators"):
-        out.write.format("noop").mode("overwrite").save()
-        for t in pollers:
-            t.join(timeout=30)
-        # backstop for the poller's backoff granularity
-        deadline = _time.time() + 10
-        while _time.time() < deadline and not any(
-            "skew guard dropped" in r.message for r in caplog.records
-        ):
-            _time.sleep(0.2)
-    msgs = [r.getMessage() for r in caplog.records]
+        with CacheRegistry():
+            jobs_before = _jobs(spark)
+            out = S.semantic_dedup_pairs(
+                df, "embedding", "vec_id", threshold=0.9, num_cells=2,
+                max_cell_size=5,
+            )
+            # only the inherent centroid collect runs at build time
+            assert _jobs(spark) - jobs_before <= 1
+            out.write.format("noop").mode("overwrite").save()
+            assert not any("skew guard" in r.message for r in caplog.records)
+        msgs = [r.getMessage() for r in caplog.records]
     assert any(
         "skew guard dropped 1 cell(s) / 21 row(s)" in m for m in msgs
     ), msgs
 
 
-def test_finished_skew_pollers_are_pruned(spark):
-    """A long-lived driver does not accumulate poller threads: once a
-    guarded plan has run and its poller has reported, the next plan's
-    registration drops that finished thread from ``_LIVE_POLLERS``."""
-    import trino_iceberg_spark.operators.diagnostics as diag
+def test_guarded_plans_never_run_cost_nothing(spark, caplog):
+    """Four guarded plans built inside one scope and never run: building
+    runs no job beyond semantic_dedup_pairs' centroid collect, and the
+    scope's exit runs no job, leaves no thread and no cached block, and
+    reports nothing (no materialized checkpoint, nothing to report)."""
+    import logging as _logging
+    import threading
 
-    rows = [(i, [1.0, 0.0]) for i in range(20)] + [(142, [1.0, 0.0])] + [
-        (157 + i, [0.0, 1.0]) for i in range(3)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    finished: list = []
-    last: list = []
-    for _ in range(4):
-        before = list(diag._LIVE_POLLERS)
-        dead = [t for t in before if not t.is_alive()]
-        assert all(t in dead for t in last)  # the previous plan's, reported
-        out = S.semantic_dedup_pairs(
-            df, "embedding", "vec_id", threshold=0.9, num_cells=2,
-            max_cell_size=5, eager_diagnostics=False,
-        )
-        mine = [t for t in diag._LIVE_POLLERS if t not in before]
-        assert mine
-        assert not any(t in diag._LIVE_POLLERS for t in dead)
-        out.write.format("noop").mode("overwrite").save()
-        for t in mine:
-            t.join(timeout=60)
-            assert not t.is_alive()
-        finished += mine
-        last = mine
-    assert len(finished) >= 4
-    assert not any(t in diag._LIVE_POLLERS for t in finished[: -len(last)])
+    from trino_iceberg_spark.operators.cachectl import CacheRegistry
+
+    docs = spark.createDataFrame(
+        [(i, f"shared boiler plate text doc{i} tail{i}") for i in range(30)],
+        "doc_id long, text string",
+    )
+    emb = _viral_cell_corpus(spark)
+    storage_before = _cached_rdds(spark)
+    threads_before = threading.active_count()
+    with caplog.at_level(_logging.WARNING, logger="trino_iceberg_spark.operators"):
+        with CacheRegistry() as scope:
+            jobs_before = _jobs(spark)
+            for _ in range(2):
+                D.ngram_jaccard_pairs(docs, "text", "doc_id", k=3, max_df=2)
+            for _ in range(2):
+                S.semantic_dedup_pairs(
+                    emb, "embedding", "vec_id", threshold=0.9, num_cells=2,
+                    max_cell_size=5,
+                )
+            # one centroid collect per semantic_dedup_pairs build
+            assert _jobs(spark) - jobs_before == 2
+            # each ngram build: index checkpoint + df-sizes pin; each
+            # semantic build: routed-cell checkpoint
+            assert len(scope) == 6 and len(scope._reports) == 4
+            jobs_at_exit = _jobs(spark)
+        assert _jobs(spark) == jobs_at_exit
+    assert len(scope) == 0 and not scope._reports
+    assert threading.active_count() == threads_before
+    assert not _cached_rdds(spark) - storage_before
+    assert not any("guard dropped" in r.message for r in caplog.records)
+
+
+def test_nested_scope_releases_only_its_own_handles(spark, docs):
+    """Pins and checkpoints register with the INNERMOST open scope: an
+    inner scope's exit frees what was made inside it and leaves the
+    outer scope's handles (and their blocks) alone."""
+    from trino_iceberg_spark.operators.cachectl import CacheRegistry
+
+    small = docs.limit(60)
+    before = _cached_rdds(spark)
+    with CacheRegistry() as outer:
+        kept = TX.tfidf(small, "text", "doc_id")
+        kept.count()
+        assert len(outer) == 1
+        outer_rdds = _cached_rdds(spark) - before
+        assert outer_rdds
+        with CacheRegistry() as inner:
+            TX.ngram_novelty(small, "text", "doc_id").count()
+            assert len(inner) == 1 and len(outer) == 1
+            inner_rdds = _cached_rdds(spark) - before - outer_rdds
+            assert inner_rdds
+        assert len(inner) == 0 and len(outer) == 1
+        now = _cached_rdds(spark)
+        assert outer_rdds <= now and not inner_rdds & now
+        # the outer checkpoint is still readable
+        assert kept.count() > 0
+    assert len(outer) == 0
+    assert not outer_rdds & _cached_rdds(spark)
+
+
+def test_scope_body_that_raises_releases_and_reports_nothing(spark, caplog):
+    """An exception inside the scope still releases every handle, runs
+    no report job and logs no report, and propagates unchanged."""
+    import logging as _logging
+
+    from trino_iceberg_spark.operators.cachectl import CacheRegistry
+
+    df = _viral_cell_corpus(spark)
+    storage_before = _cached_rdds(spark)
+    with caplog.at_level(_logging.WARNING, logger="trino_iceberg_spark.operators"):
+        with pytest.raises(RuntimeError, match="boom"):
+            with CacheRegistry() as scope:
+                out = S.semantic_dedup_pairs(
+                    df, "embedding", "vec_id", threshold=0.9, num_cells=2,
+                    max_cell_size=5,
+                )
+                out.write.format("noop").mode("overwrite").save()
+                assert _cached_rdds(spark) - storage_before
+                jobs_at_raise = _jobs(spark)
+                raise RuntimeError("boom")
+    assert _jobs(spark) == jobs_at_raise
+    assert len(scope) == 0
+    assert not _cached_rdds(spark) - storage_before
+    assert not any("skew guard" in r.message for r in caplog.records)
+
+
+def test_result_used_after_scope_exit(spark, docs, embeddings):
+    """What the CacheRegistry docstring promises for a result used after
+    its scope exits: a pinned result recomputes from its lineage (same
+    rows); a checkpointed one raises Spark's "not found" block error,
+    since the checkpoint truncated its lineage."""
+    from pyspark.errors import PySparkException
+    from py4j.protocol import Py4JJavaError
+
+    from trino_iceberg_spark.operators.cachectl import CacheRegistry
+
+    a = embeddings.filter(F.col("vec_id") % 20 == 0)
+    b = embeddings.filter(F.col("vec_id") % 20 == 10)
+    with CacheRegistry():
+        pinned = S.margin_mining(a, b, "embedding", "vec_id", k=2)
+        inside = sorted(pinned.collect())
+    assert sorted(pinned.collect()) == inside
+
+    with CacheRegistry():
+        checkpointed = TX.tfidf(docs.limit(60), "text", "doc_id")
+        checkpointed.count()
+    with pytest.raises((Py4JJavaError, PySparkException), match="not found"):
+        checkpointed.count()
 
 
 @pytest.mark.parametrize("elem", ["float", "double"])
@@ -201,8 +286,9 @@ def test_seeded_centroids_bit_identical_to_spark_expression(spark, elem):
     """Driver-side centroid normalization equals the Spark expression it
     replaced (``unit_vec(_as_double(...))`` over the same top-k rows)
     float.hex for float.hex, for array<float> and array<double> input,
-    including all-zero vectors (+0.0 and -0.0), a vector with a null
-    element, and magnitudes from 1e-150 to 1e150."""
+    including all-zero vectors (+0.0 and -0.0) and magnitudes from
+    1e-150 to 1e150. A vector with a null element never seeds, so it is
+    excluded from the expected top-k too."""
     import random
 
     rng = random.Random(7)
@@ -229,18 +315,75 @@ def test_seeded_centroids_bit_identical_to_spark_expression(spark, elem):
                 F.col("vec_id").alias("cid"),
                 S.unit_vec(S._as_double(F.col("embedding"))).alias("cv"),
             )
+            .filter(F.col("cid") != 62)
             .orderBy(F.xxhash64(F.col("cid") + seed))
             .limit(num_cells)
             .collect()
         ]
-        assert len(got) == num_cells
+        assert len(got) == min(num_cells, len(rows) - 1)
         assert hexes(got) == hexes(expected)
         if num_cells == len(rows):
             # every special row is among the centroids compared above
             got_hex = hexes(got)
             assert [(0.0).hex()] * 24 in got_hex
             assert [(-0.0).hex()] * 24 in got_hex
-            assert [None] * 24 in got_hex
+            assert not any(None in v for v in got)
+
+
+def _corpus_with_null_vectors(spark):
+    """(clean, dirty): 10 four-dim vectors in five duplicate pairs,
+    and the same rows plus one null vector (id 100) and one vector with
+    a null element (id 101)."""
+    import random
+
+    rng = random.Random(3)
+    base = [[rng.uniform(-1, 1) for _ in range(4)] for _ in range(5)]
+    rows = [(i, base[i % 5][:]) for i in range(10)]
+    schema = "vec_id long, embedding array<double>"
+    clean = spark.createDataFrame(rows, schema)
+    dirty = spark.createDataFrame(rows + [(100, None), (101, [0.5, None, 0.5, 0.5])], schema)
+    return clean, dirty
+
+
+def test_null_vectors_never_seed_and_route_nowhere(spark):
+    """A null embedding, or one with a null element, never seeds a
+    centroid and routes to no cell: semantic dedup, IVF search and PQ
+    codebook fitting all run on such a corpus and give exactly what they
+    give without those two rows."""
+    clean, dirty = _corpus_with_null_vectors(spark)
+
+    def dedup(df):
+        return sorted(
+            S.semantic_dedup_pairs(
+                df, "embedding", "vec_id", threshold=0.99, num_cells=3
+            ).collect()
+        )
+
+    pairs = dedup(dirty)
+    assert pairs == dedup(clean)
+    assert {(r.id_a, r.id_b) for r in pairs} >= {(i, i + 5) for i in range(5)}
+
+    def search(df):
+        return sorted(
+            S.ivf_topk(
+                df, df, "embedding", "vec_id", k=2, num_cells=3, nprobe=2
+            ).collect()
+        )
+
+    hits = search(dirty)
+    assert hits and hits == search(clean)
+    ids = {r.query_id for r in hits} | {r.neighbor_id for r in hits}
+    assert not ids & {100, 101}
+
+    for iters in (0, 1):
+        books = S.pq_codebooks(
+            dirty, "embedding", "vec_id", m=2, ksub=12, seed=7, lloyd_iters=iters
+        )
+        assert books == S.pq_codebooks(
+            clean, "embedding", "vec_id", m=2, ksub=12, seed=7, lloyd_iters=iters
+        )
+        assert len(books[0]) == 10  # every whole vector seeds, no null one
+        assert all(x is not None for book in books for code in book for x in code)
 
 
 def test_incremental_minhash_equals_full_run_on_touching_pairs(spark, docs):
@@ -1311,21 +1454,28 @@ def test_max_df_guard_survives_viral_shingle(spark, caplog):
     with the default-on max_df cap the viral shingle is dropped (loudly)
     and the job finishes with zero pairs, since every other shingle is
     unique. This is the same hot-key class as dd03's bucket cap and
-    dd11's max_cell_size."""
+    dd11's max_cell_size. The drop is logged when the query scope the
+    plan ran in exits."""
     import logging
 
+    from trino_iceberg_spark.operators.cachectl import CacheRegistry
     from trino_iceberg_spark.operators.dedup import ngram_jaccard_pairs
 
     docs = spark.range(100_000).selectExpr(
         "id AS doc_id",
         "concat('common header trigram unique', id, ' tail', id, ' end', id) AS text",
     )
-    with caplog.at_level(logging.WARNING, logger="trino_iceberg_spark.operators.dedup"):
-        pairs = ngram_jaccard_pairs(
-            docs, "text", "doc_id", k=3, threshold=0.1, max_df=100
-        )
-        assert pairs.count() == 0
-    assert any("max_df guard dropped" in r.message for r in caplog.records)
+    with caplog.at_level(logging.WARNING, logger="trino_iceberg_spark.operators"):
+        with CacheRegistry():
+            pairs = ngram_jaccard_pairs(
+                docs, "text", "doc_id", k=3, threshold=0.1, max_df=100
+            )
+            assert pairs.count() == 0
+    msgs = [r.getMessage() for r in caplog.records]
+    assert any(
+        "max_df guard dropped 1 viral shingle(s) / 100000 index row(s)" in m
+        for m in msgs
+    ), msgs
 
 
 def test_max_df_cap_is_one_sided_underestimate(spark):
@@ -1453,59 +1603,67 @@ def test_margin_mining_properties(spark, sf_dir):
 
 
 def test_cache_registry_collects_and_releases_exact_pins(spark, docs, embeddings):
-    """CacheRegistry records exactly the tables an operator pinned and
-    unpersist_all releases them — the per-call release lever the
-    caller-owns-cache contract gained in round 8 (ADVICE r7)."""
+    """A query scope records exactly the tables an operator pinned or
+    checkpointed inside it and releases them on exit — the per-call
+    release lever of the caller-owns-cache contract."""
     from trino_iceberg_spark.operators.cachectl import CacheRegistry
     from trino_iceberg_spark.operators.curation import curate_documents
 
     small = docs.limit(120)
-    reg = CacheRegistry()
-    # ngram_jaccard_pairs pins the df-sizes table AND (round 17) records
-    # its exploded-index lazy checkpoint for exact block release
-    pairs = D.ngram_jaccard_pairs(small, "text", "doc_id", caches=reg)
-    assert len(reg) == 2
-    pairs.count()  # materialize while pinned
-    assert all(
-        df.storageLevel.useMemory or df.storageLevel.useDisk for df in reg._pinned
-    )
-    jsc = spark.sparkContext._jsc.sc()
-    blocks_before = len(jsc.getRDDStorageInfo())
-    assert blocks_before >= 2  # the pin AND the checkpointed index hold blocks
-    assert reg.unpersist_all() == 2
+    before = _cached_rdds(spark)
+    # ngram_jaccard_pairs pins the df-sizes table AND records its
+    # exploded-index lazy checkpoint for exact block release
+    with CacheRegistry() as reg:
+        pairs = D.ngram_jaccard_pairs(small, "text", "doc_id")
+        assert len(reg) == 2
+        pairs.count()  # materialize while pinned
+        assert all(
+            df.storageLevel.useMemory or df.storageLevel.useDisk for df in reg._pinned
+        )
+        mine = _cached_rdds(spark) - before
+        assert len(mine) >= 2  # the pin AND the checkpointed index hold blocks
     assert len(reg) == 0
-    # ADVICE r16: checkpoint blocks bypass clearCache — the registry must
-    # actually free them, not just forget them
-    assert len(jsc.getRDDStorageInfo()) < blocks_before
+    # checkpoint blocks bypass clearCache — the scope must actually free
+    # them, not just forget them
+    assert not mine & _cached_rdds(spark)
     # curate_documents records its (md5, id) pair-table checkpoint
-    # (round 17: the victim set is minima-agg + join-back over a shared
-    # lazy checkpoint — skew-safe, and the registry can free the blocks)
-    reg2 = CacheRegistry()
-    curate_documents(small, caches=reg2).count()
-    assert len(reg2) == 1 and reg2.unpersist_all() == 1
-    # margin_mining pins fwd + bwd top-k; the context-manager form releases
+    with CacheRegistry() as reg2:
+        curate_documents(small).count()
+        assert len(reg2) == 1
+    assert len(reg2) == 0
+    # margin_mining pins fwd + bwd top-k; both are unpersisted on exit
     a = embeddings.filter(F.col("vec_id") % 20 == 0)
     b = embeddings.filter(F.col("vec_id") % 20 == 10)
     with CacheRegistry() as reg3:
-        S.margin_mining(a, b, "embedding", "vec_id", k=2, caches=reg3).count()
+        S.margin_mining(a, b, "embedding", "vec_id", k=2).count()
         assert len(reg3) == 2
         pinned = list(reg3)
     assert all(not (df.storageLevel.useMemory or df.storageLevel.useDisk) for df in pinned)
+    # outside a scope the same operator pins as before and records nothing
+    out = S.margin_mining(a, b, "embedding", "vec_id", k=2)
+    assert len(reg3) == 0 and out.count() >= 0
+    spark.catalog.clearCache()
 
 
 def test_capped_index_lazy_diagnostics_identical_output(spark, docs):
-    """eager_diagnostics=False keeps the max-df guard's anti-join (same
-    rows out) while skipping the call-time diagnostic job."""
+    """The max-df guard's anti-join gives the same rows in and out of a
+    query scope: the scope only records handles and queues the report."""
+    from trino_iceberg_spark.operators.cachectl import CacheRegistry
+
     small = docs.limit(150)
-    eager = D.ngram_jaccard_pairs(small, "text", "doc_id", k=3, max_df=5)
-    lazy = D.ngram_jaccard_pairs(
-        small, "text", "doc_id", k=3, max_df=5, eager_diagnostics=False
-    )
     key = lambda r: (r["id_a"], r["id_b"])  # noqa: E731
-    er = sorted(eager.collect(), key=key)
-    lr = sorted(lazy.collect(), key=key)
-    assert [key(r) for r in er] == [key(r) for r in lr]
-    assert all(abs(x["jaccard"] - y["jaccard"]) < 1e-12 for x, y in zip(er, lr))
+    outside = sorted(
+        D.ngram_jaccard_pairs(small, "text", "doc_id", k=3, max_df=5).collect(),
+        key=key,
+    )
+    with CacheRegistry():
+        inside = sorted(
+            D.ngram_jaccard_pairs(small, "text", "doc_id", k=3, max_df=5).collect(),
+            key=key,
+        )
+    assert [key(r) for r in outside] == [key(r) for r in inside]
+    assert all(abs(x["jaccard"] - y["jaccard"]) < 1e-12 for x, y in zip(outside, inside))
+    spark.catalog.clearCache()
 
 
 def test_margin_mining_lsh_backed_large_by_large(spark, embeddings):
@@ -1784,43 +1942,35 @@ def test_mmr_rerank_string_ids(spark):
 
 def test_cache_registry_covers_all_caller_owned_operators(spark, docs, embeddings):
     """Every operator in the caller-owns-the-cache set must record its
-    pins when given a registry (review r8: several persist sites
-    bypassed pin(), leaving clearCache() as the only release lever)."""
+    pins and checkpoints in an open scope (several persist sites once
+    bypassed pin(), leaving clearCache() as the only release lever, and
+    checkpoint blocks bypass clearCache entirely)."""
     from trino_iceberg_spark.operators.cachectl import CacheRegistry
 
     small_docs = docs.limit(60)
     small_emb = embeddings.limit(80)
-    # round 16 moved minhash_dedup_pairs / ngram_jaccard_pairs /
-    # semantic_dedup_pairs' shared intermediates from persist() to lazy
-    # localCheckpoint; round 17 records those checkpoints too (ADVICE
-    # r16: checkpoint blocks bypass clearCache, so the registry is their
-    # ONLY exact-release lever) — every operator below must record ≥1
-    # releasable handle.
     cases = [
-        lambda reg: D.incremental_minhash_pairs(
+        lambda: D.incremental_minhash_pairs(
             small_docs.filter(F.col("doc_id") % 2 == 0),
             small_docs.filter(F.col("doc_id") % 2 == 1),
-            "text", "doc_id", num_hashes=8, bands=4, caches=reg,
+            "text", "doc_id", num_hashes=8, bands=4,
         ),
-        lambda reg: D.embedding_dedup_pairs(
-            small_emb, "embedding", "vec_id", caches=reg
+        lambda: D.embedding_dedup_pairs(small_emb, "embedding", "vec_id"),
+        lambda: TX.ngram_novelty(small_docs, "text", "doc_id"),
+        lambda: D.minhash_dedup_pairs(
+            small_docs, "text", "doc_id", num_hashes=8, bands=4
         ),
-        lambda reg: TX.ngram_novelty(small_docs, "text", "doc_id", caches=reg),
-        lambda reg: D.minhash_dedup_pairs(
-            small_docs, "text", "doc_id", num_hashes=8, bands=4, caches=reg
+        lambda: S.semantic_dedup_pairs(
+            small_emb, "embedding", "vec_id", num_cells=4
         ),
-        lambda reg: S.semantic_dedup_pairs(
-            small_emb, "embedding", "vec_id", num_cells=4, caches=reg
-        ),
-        lambda reg: TX.tfidf(small_docs, "text", "doc_id", caches=reg),
+        lambda: TX.tfidf(small_docs, "text", "doc_id"),
     ]
     for build in cases:
-        reg = CacheRegistry()
-        out = build(reg)
-        assert len(reg) >= 1, build
-        out.count()  # materialize through the pinned lineage
-        released = reg.unpersist_all()
-        assert released >= 1 and len(reg) == 0
+        with CacheRegistry() as reg:
+            out = build()
+            assert len(reg) >= 1, build
+            out.count()  # materialize through the pinned lineage
+        assert len(reg) == 0
 
 
 def test_mmr_rerank_mixed_id_types_follow_each_frame(spark):

@@ -22,6 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from trino_iceberg_spark.operators.cachectl import CacheRegistry  # noqa: E402
 from trino_iceberg_spark.queries.registry import QUERIES, load_all  # noqa: E402
 from trino_iceberg_spark.session import get_spark  # noqa: E402
 
@@ -59,13 +60,16 @@ def main() -> int:
             print(f"?? unknown query: {name}")
             continue
         ts: list[float] = []
-        for i in range(args.passes):
-            spark.sparkContext.setJobDescription(f"{name} pass {i}")
-            t0 = time.time()
-            df = QUERIES[name](spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
-            ts.append(round(time.time() - t0, 3))
-            spark.sparkContext.setJobDescription(None)
+        # Same per-query scope as bench.py: exiting it after the timed
+        # passes logs skew-guard reports and frees checkpoint blocks.
+        with CacheRegistry():
+            for i in range(args.passes):
+                spark.sparkContext.setJobDescription(f"{name} pass {i}")
+                t0 = time.time()
+                df = QUERIES[name](spark, SF_DIR)
+                df.write.format("noop").mode("overwrite").save()
+                ts.append(round(time.time() - t0, 3))
+                spark.sparkContext.setJobDescription(None)
         spark.catalog.clearCache()
         print(f"{name}: passes={ts} best={min(ts)}")
         if args.explain:

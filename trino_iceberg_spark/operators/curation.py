@@ -71,7 +71,6 @@ def curate_documents(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    caches=None,
     **rules,
 ) -> DataFrame:
     """Kept documents after quality+language rules and exact dedup.
@@ -103,8 +102,8 @@ def curate_documents(
     checkpointed rows are 24 bytes/doc, the cheapest materialization in
     the pipeline, and a naive un-checkpointed join-back was measured
     re-running the quality-feature pass (+0.5 s/call at sf0.1).
-    ``caches=`` callers get an exact-release handle for the checkpoint
-    blocks (:func:`..operators.cachectl.checkpoint_lazy`)."""
+    An open query scope frees the checkpoint blocks
+    (:func:`..operators.cachectl.checkpoint_lazy`)."""
     from .cachectl import checkpoint_lazy
 
     decided = curation_decisions(df, text_col, id_col, **rules)
@@ -113,8 +112,7 @@ def curate_documents(
         kept.select(
             F.md5(F.col(text_col).cast("binary")).alias("_h"),
             F.col(id_col).alias("_vid"),
-        ),
-        caches,
+        )
     )
     # One row per DUPLICATED text: its keeper id. Groups of one drop out
     # here, so the join-back touches only duplicate rows (ids are unique

@@ -267,7 +267,6 @@ def lsh_candidate_pairs(
     bands: int = 16,
     max_bucket_size: int = 1000,
     portable: bool = False,
-    caches=None,
 ) -> DataFrame:
     """LSH banding: split the signature into ``bands``, hash each band,
     group ids per (band, band_hash) bucket → candidate id pairs (a < b).
@@ -294,8 +293,7 @@ def lsh_candidate_pairs(
     the exact case the guard exists for — as one id array in a single
     aggregation buffer before dropping it. Bucket membership and the
     output pair set are unchanged; the cost is one extra exchange of the
-    lightweight (id, band, band_hash) rows. ``caches=`` is accepted for
-    API compatibility but records nothing."""
+    lightweight (id, band, band_hash) rows."""
     banded = _banded(df, id_col, signature_col, bands, portable=portable)
     viral = (
         banded.groupBy("band", "band_hash")
@@ -337,7 +335,6 @@ def minhash_dedup_pairs(
     threshold: float = 0.7,
     seed: int = 42,
     portable: bool = False,
-    caches=None,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: returns verified pairs
     (id_a, id_b, jaccard) with exact shingle-Jaccard ≥ threshold.
@@ -376,12 +373,11 @@ def minhash_dedup_pairs(
         df.select(F.col(id_col).alias("_id"), sh_col.alias("_shingles")).withColumn(
             "minhash_sig",
             minhash_signature(F.col("_shingles"), num_hashes, seed, pre_hashed=True),
-        ),
-        caches,
+        )
     )
     with_shingles = with_sig.select("_id", "_shingles")
     candidates = lsh_candidate_pairs(
-        with_sig, "_id", "minhash_sig", bands, portable=portable, caches=caches
+        with_sig, "_id", "minhash_sig", bands, portable=portable
     )
     sh_a = with_shingles.select(
         F.col("_id").alias("id_a"), F.col("_shingles").alias("_sh_a")
@@ -412,7 +408,6 @@ def incremental_minhash_pairs(
     seed: int = 42,
     max_bucket_size: int = 1000,
     portable: bool = False,
-    caches=None,
 ) -> DataFrame:
     """Near-dup pairs for a NEW ingest batch against an existing corpus —
     the production ingest path: every pair touches the increment
@@ -442,8 +437,7 @@ def incremental_minhash_pairs(
             shingled.withColumn(
                 "minhash_sig",
                 minhash_signature(F.col("_shingles"), num_hashes, seed, pre_hashed=True),
-            ),
-            caches,
+            )
         )
 
     inc = prep(increment_df)
@@ -492,8 +486,6 @@ def _capped_inverted_index(
     join_keys: list[str],
     max_df: int | None,
     op_name: str,
-    eager_diagnostics: bool = True,
-    caches=None,
 ) -> DataFrame:
     """Drop viral shingles (document frequency > ``max_df``) from an
     exploded inverted index before it feeds a pair self-join.
@@ -514,67 +506,36 @@ def _capped_inverted_index(
     guard became the DEFAULT (``max_df=10_000``) in round 7 per the r6
     hardening directive — pre-r7 callers implicitly ran ``max_df=None``
     and now get the documented one-sided underestimate on viral-shingle
-    corpora unless they opt out. With ``eager_diagnostics=True`` (the
-    default, matching r7 behavior) the logged dropped-count makes guard
-    construction EAGER — one job (shingling + the df aggregate) runs at
-    call time even if the caller never executes the returned plan;
-    ``eager_diagnostics=False`` keeps the guard's anti-join (so the
-    RESULT is identical) but skips the diagnostic, restoring a fully
-    lazy builder. The per-shingle df-sizes table is persisted so the
-    guard reuses rather than recomputes it (caller owns that cache —
-    pass ``caches`` to get a release handle, :mod:`.cachectl`); the
-    exploded index itself is shared via the caller's lazy
-    ``localCheckpoint`` since round 16 and is NOT pinned here.
-    ``max_df=None`` skips everything."""
+    corpora unless they opt out. The builder is lazy: the dropped-count
+    report is queued on the open query scope
+    (:func:`.cachectl.skew_guard_report`) and logged when the scope
+    exits after the caller ran the plan; outside a scope nothing is
+    reported. ``ex`` must be the lazily checkpointed index the report
+    watches. The per-shingle df-sizes table is pinned so the guard
+    reuses rather than recomputes it (caller owns that cache,
+    :mod:`.cachectl`). ``max_df=None`` skips everything."""
     if max_df is None:
         return ex
-    import logging
+    from .cachectl import pin, skew_guard_report
 
-    from .cachectl import pin
-
-    sizes = pin(
-        ex.groupBy(*join_keys).agg(F.count(F.lit(1)).alias("_df")), caches
-    )
-    if eager_diagnostics:
-        dropped = (
-            sizes.filter(F.col("_df") > max_df)
-            .agg(F.count(F.lit(1)).alias("shingles"), F.sum("_df").alias("rows"))
-            .collect()[0]
-        )
-        if dropped["shingles"]:
-            logging.getLogger(__name__).warning(
-                "%s: max_df guard dropped %d viral shingle(s) / %d index row(s) "
-                "over max_df=%d — similarity is underestimated one-sidedly for "
-                "pairs sharing those shingles",
-                op_name, dropped["shingles"], dropped["rows"], max_df,
-            )
+    sizes = pin(ex.groupBy(*join_keys).agg(F.count(F.lit(1)).alias("_df")))
     # Filter by ANTI-joining the VIRAL set (complement of the ok-filter,
     # logically identical): viral shingles number at most
     # index_rows / max_df — usually zero, pathologically still tiny next
     # to the index — so AQE turns this into a broadcast anti-join, where
     # an inner join against the huge ok set would shuffle the full index.
     viral = sizes.filter(F.col("_df") > max_df)
-    if not eager_diagnostics:
-        # Lazy report (round 17, VERDICT r16 #8): the dropped-shingle
-        # counts still surface, but off the query path — an async
-        # micro-job over the materialized index checkpoint, fired by the
-        # caller's own action (see diagnostics.py for why NOT a query
-        # observation). The builder stays fully lazy.
-        from .diagnostics import async_skew_report, skew_guard_report
-
-        async_skew_report(
-            ex,
-            viral.agg(F.count(F.lit(1)), F.coalesce(F.sum("_df"), F.lit(0))),
-            skew_guard_report(
-                op_name,
-                "max_df guard dropped %d viral shingle(s) / %d index "
-                f"row(s) over max_df={max_df} — similarity is "
-                "underestimated one-sidedly for pairs sharing those "
-                "shingles",
-            ),
-        )
-    viral = viral.select(*join_keys)
-    return ex.join(viral, join_keys, "left_anti")
+    skew_guard_report(
+        ex,
+        viral,
+        "_df",
+        op_name,
+        "max_df guard dropped %d viral shingle(s) / %d index "
+        f"row(s) over max_df={max_df} — similarity is "
+        "underestimated one-sidedly for pairs sharing those "
+        "shingles",
+    )
+    return ex.join(viral.select(*join_keys), join_keys, "left_anti")
 
 
 def ngram_jaccard_pairs(
@@ -585,8 +546,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     block_col: Column | None = None,
     max_df: int | None = 10_000,
-    eager_diagnostics: bool = True,
-    caches=None,
 ) -> DataFrame:
     """Exact n-gram Jaccard pairs via an inverted index (within optional
     blocks) — the scalable exact algorithm, not pairwise intersects.
@@ -607,12 +566,9 @@ def ngram_jaccard_pairs(
     :func:`_capped_inverted_index`. The intersection count then misses
     capped shingles while |A| and |B| still count them, so the reported
     Jaccard is a one-sided UNDERESTIMATE bounded by the number of viral
-    shingles a pair shares; exact behavior needs ``max_df=None``. With
-    the guard on, CONSTRUCTION IS EAGER by default (it shingles the
-    corpus once to log the dropped-shingle diagnostic);
-    ``eager_diagnostics=False`` keeps the guard but skips the logged
-    count (fully lazy, identical output), and ``max_df=None`` disables
-    the guard — see :func:`_capped_inverted_index`."""
+    shingles a pair shares; exact behavior needs ``max_df=None``. The
+    dropped-shingle count is logged at the exit of the open query scope
+    — see :func:`_capped_inverted_index`."""
     cols = [F.col(id_col).alias("_id"), shingle_hashes(content_col, k).alias("_sh")]
     join_keys = ["_s"]
     if block_col is not None:
@@ -624,8 +580,8 @@ def ngram_jaccard_pairs(
     # shares the RDD by identity across all consumers (round 16 — was a
     # persist(), whose plan-matching re-derived the explode per reference
     # in composed plans; same rationale as minhash_dedup_pairs' signature
-    # table). Routed through checkpoint_lazy (round 17) so callers that
-    # pass ``caches=`` get an exact-release handle for the blocks.
+    # table). Routed through checkpoint_lazy (round 17) so an open query
+    # scope frees the blocks.
     from .cachectl import checkpoint_lazy
 
     ex = checkpoint_lazy(
@@ -634,12 +590,9 @@ def ngram_jaccard_pairs(
             F.col("_id"),
             F.col("_n"),
             F.explode("_sh").alias("_s"),
-        ),
-        caches,
+        )
     )
-    ex = _capped_inverted_index(
-        ex, join_keys, max_df, "ngram_jaccard_pairs", eager_diagnostics, caches
-    )
+    ex = _capped_inverted_index(ex, join_keys, max_df, "ngram_jaccard_pairs")
     a = ex.select(
         *join_keys, F.col("_id").alias("id_a"), F.col("_n").alias("_n_a")
     )
@@ -674,8 +627,6 @@ def containment_pairs(
     threshold: float = 0.8,
     block_col: Column | None = None,
     max_df: int | None = 10_000,
-    eager_diagnostics: bool = True,
-    caches=None,
 ) -> DataFrame:
     """Exact n-gram CONTAINMENT pairs (Broder 1997, "On the resemblance
     and containment of documents"): the ASYMMETRIC companion to
@@ -705,10 +656,8 @@ def containment_pairs(
     missing from the intersection count while |S(src)| still counts
     them, so containment is a one-sided underestimate bounded by the
     number of viral shingles the pair shares; ``max_df=None`` restores
-    exact semantics (and a fully lazy builder — the guard's logged
-    diagnostic makes construction eager, see
-    :func:`_capped_inverted_index`). ``block_col`` narrows the index
-    exactly as in the Jaccard form.
+    exact semantics (see :func:`_capped_inverted_index`). ``block_col``
+    narrows the index exactly as in the Jaccard form.
 
     Documents with fewer than ``k`` words have an EMPTY shingle set and
     emit nothing (``empty_when_short=True`` — containment over an empty
@@ -737,12 +686,9 @@ def containment_pairs(
             F.col("_id"),
             F.col("_n"),
             F.explode("_sh").alias("_s"),
-        ),
-        caches,
+        )
     )
-    ex = _capped_inverted_index(
-        ex, join_keys, max_df, "containment_pairs", eager_diagnostics, caches
-    )
+    ex = _capped_inverted_index(ex, join_keys, max_df, "containment_pairs")
     a = ex.select(*join_keys, F.col("_id").alias("id_a"), F.col("_n").alias("_n_a"))
     b = ex.select(*join_keys, F.col("_id").alias("id_b"), F.col("_n").alias("_n_b"))
     counted = (
@@ -874,7 +820,6 @@ def embedding_dedup_pairs(
     num_tables: int = 1,
     seed: int = 42,
     dim: int | None = 64,
-    caches=None,
 ) -> DataFrame:
     """Near-dup pairs by embedding cosine ≥ threshold.
 
@@ -909,10 +854,10 @@ def embedding_dedup_pairs(
     # Persist before the explode: the plane projections (num_tables ×
     # num_planes dot products per vector) feed both self-join sides and
     # should run once. The explode itself is a cheap per-row expansion.
-    # Caller owns the cache (dedup module note); caches= records the pin.
+    # Caller owns the cache (:mod:`.cachectl`): an open scope records the pin.
     from .cachectl import pin
 
-    v = pin(v.withColumn("_tb_arr", tables), caches)
+    v = pin(v.withColumn("_tb_arr", tables))
     bucketed = v.select("_id", "_vec", F.explode(F.col("_tb_arr")).alias("_tb")).select(
         "_id", "_vec", F.col("_tb.tbl").alias("_tbl"), F.col("_tb.bkt").alias("_bucket")
     )

@@ -269,31 +269,33 @@ def _seeded_centroids(
     Only the ``num_cells`` raw vectors are collected; they are normalized
     here by :func:`_spark_unit`, bit-identical to ``unit_vec(_as_double())``
     but without running that per-element lambda on every row before the
-    top-k."""
-    cents = (
-        df.select(F.col(id_col).alias("cid"), F.col(embedding_col).alias("cv"))
-        .orderBy(F.xxhash64(F.col("cid") + seed))
-        .limit(num_cells)
-        .collect()
-    )
+    top-k.
+
+    A null vector, or one with a null (or NaN) element, never seeds: it
+    has no direction, and :func:`_route_cells` routes it to no cell."""
+    seeds = df.select(F.col(id_col).alias("cid"), F.col(embedding_col).alias("cv"))
+
+    def top(d: DataFrame) -> list:
+        return d.orderBy(F.xxhash64(F.col("cid") + seed)).limit(num_cells).collect()
+
+    cents = top(seeds)
+    if any(r["cv"] is None or any(x is None or x != x for x in r["cv"]) for r in cents):
+        # Only then pay for the filter: its per-element lambda runs on
+        # every row (measured +23 % on dd11's centroid collect at sf0.01).
+        cents = top(seeds.filter(F.forall("cv", lambda x: x.isNotNull() & ~F.isnan(x))))
     return [list(_spark_unit(row["cv"])) for row in cents]
 
 
-def _spark_unit(vec: list | None) -> list | None:
+def _spark_unit(vec: list) -> list:
     """Driver-side twin of ``unit_vec(_as_double(col))`` for one collected
-    array, with Spark's exact arithmetic: elements widen to double (exact
-    for float), the norm is the sequential fold ``acc + x*x`` from 0.0
-    then ``sqrt`` (not ``np.linalg.norm``, not a compensated ``sum``),
-    and each element is divided by it. A zero-norm vector passes through;
-    a null array stays null and a null element nulls every element (the
-    norm is null)."""
+    array without nulls, with Spark's exact arithmetic: elements widen to
+    double (exact for float), the norm is the sequential fold
+    ``acc + x*x`` from 0.0 then ``sqrt`` (not ``np.linalg.norm``, not a
+    compensated ``sum``), and each element is divided by it. A zero-norm
+    vector passes through."""
     import math
 
-    if vec is None:
-        return None
-    xs = [None if x is None else float(x) for x in vec]
-    if None in xs:
-        return [None] * len(xs)
+    xs = [float(x) for x in vec]
     acc = 0.0
     for x in xs:
         acc = acc + x * x
@@ -328,6 +330,26 @@ def _unit_centroids(cent_rows: list[list[float]]):
     return (C / cn[:, None]).T
 
 
+def _whole_vectors(pdf):
+    """``(rows, V)`` for an Arrow batch with a ``_v`` vector column: the
+    rows whose vector is non-null with no null element, and their stacked
+    float64 matrix. A null element reaches pandas as NaN, so a NaN
+    element drops its row too. Every numpy batch path goes through here,
+    so such a vector routes to no cell and gets no code."""
+    import numpy as np
+
+    present = pdf["_v"].notna().to_numpy()
+    if not present.all():
+        pdf = pdf[present]
+    if not len(pdf):
+        return pdf, None
+    V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
+    whole = ~np.isnan(V).any(axis=1)
+    if whole.all():
+        return pdf, V
+    return pdf[whole], V[whole]
+
+
 def _route_cells(src: DataFrame, cent_rows: list[list[float]], nprobe: int = 1) -> DataFrame:
     """Route ``(_id, _v array<double>)`` rows to their ``nprobe`` nearest
     centroid cells via one numpy GEMM per Arrow batch, emitting
@@ -340,7 +362,8 @@ def _route_cells(src: DataFrame, cent_rows: list[list[float]], nprobe: int = 1) 
     measured 12s vs <1s on the dd11 bench entry at just 16×64. Ties route
     to the lowest cell id (stable argsort), and zero vectors pass through
     unnormalized and land in cell 0 — both matching the expression
-    semantics this replaced."""
+    semantics this replaced. A null vector, or one with a null element,
+    emits no row (:func:`_whole_vectors`)."""
     import numpy as np
     import pandas as pd
 
@@ -357,9 +380,9 @@ def _route_cells(src: DataFrame, cent_rows: list[list[float]], nprobe: int = 1) 
 
     def route(batches):
         for pdf in batches:
+            pdf, V = _whole_vectors(pdf)
             if not len(pdf):
                 continue
-            V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
             n = np.linalg.norm(V, axis=1)
             n[n == 0] = 1.0
             U = V / n[:, None]
@@ -619,9 +642,9 @@ def _pq_lloyd_step(
 
     def partials(batches):
         for pdf in batches:
+            pdf, V = _whole_vectors(pdf)
             if not len(pdf):
                 continue
-            V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
             U = _seq_unit_rows(V)
             codes = _pq_codes_for(U, books)
             out = []
@@ -734,9 +757,9 @@ def pq_encode(
 
     def encode(batches):
         for pdf in batches:
+            pdf, V = _whole_vectors(pdf)
             if not len(pdf):
                 continue
-            V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
             codes = _pq_codes_for(_seq_unit_rows(V), books)
             yield pd.DataFrame({"_id": pdf["_id"].to_numpy(), out_col: list(codes)})
 
@@ -786,9 +809,9 @@ def pq_index_rows(
 
     def route_encode(batches):
         for pdf in batches:
+            pdf, V = _whole_vectors(pdf)
             if not len(pdf):
                 continue
-            V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
             U = _seq_unit_rows(V)
             cells = (U @ CT).argmax(axis=1).astype("int32")  # first max = lowest cell
             codes = _pq_codes_for(U, books)
@@ -887,9 +910,9 @@ def pq_adc_topk(
 
     def route_luts(batches):
         for pdf in batches:
+            pdf, V = _whole_vectors(pdf)
             if not len(pdf):
                 continue
-            V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
             U = _seq_unit_rows(V)
             order = np.argsort(-(U @ CT), axis=1, kind="stable")[:, :nprobe]
             luts = _pq_luts_for(U, books)
@@ -971,8 +994,6 @@ def semantic_dedup_pairs(
     num_cells: int | None = None,
     seed: int = 42,
     max_cell_size: int = 100_000,
-    eager_diagnostics: bool = True,
-    caches=None,
     centroid_source: DataFrame | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic near-dedup over an embedding column
@@ -996,12 +1017,15 @@ def semantic_dedup_pairs(
     (:func:`_derived_num_cells`), so pair work stays ~``n ×
     max_cell_size/10`` instead of n²/16, and the skew guard below stops
     being the de-facto (silent) recall ceiling. Cells it still drops are
-    logged loudly — recall loss should be visible, never inferred;
-    ``eager_diagnostics=False`` keeps the guard's filter (identical
-    output) but skips the logged dropped-cell report, restoring a fully
-    lazy builder with two fewer up-front jobs (the report collect plus
-    the cache materialization it forces) — the same opt-out contract as
-    :func:`~..operators.dedup._capped_inverted_index`.
+    logged loudly — recall loss should be visible, never inferred — when
+    the open query scope exits after the caller ran the plan
+    (:func:`.cachectl.skew_guard_report`; the same contract as
+    :func:`~..operators.dedup._capped_inverted_index`). Outside a scope
+    the guard filters but reports nothing.
+
+    Vectors that are null or hold a null element never seed a centroid
+    and route to no cell (:func:`_route_cells`), so they pair with
+    nothing.
 
     ``centroid_source`` (round 17, guide §2.4): an alternative DataFrame
     holding the SAME rows as ``df``, used only for the seeded-centroid
@@ -1011,8 +1035,6 @@ def semantic_dedup_pairs(
     parallelism spares the tiny collect job a pointless full exchange
     (measured ~0.5 s/pass on dd11's spread input at sf0.1).
     """
-    import logging
-
     cdf = centroid_source if centroid_source is not None else df
     if num_cells is None:
         num_cells = _derived_num_cells(cdf.count(), max(1, max_cell_size // 10))
@@ -1027,43 +1049,21 @@ def semantic_dedup_pairs(
     # RDD by identity across all three (round 16 — was a persist(), whose
     # plan-matching re-derived the Arrow routing stage per reference in
     # composed/AQE plans; same rationale as dd03's shingle table). Routed
-    # through checkpoint_lazy (round 17) so ``caches=`` callers get an
-    # exact-release handle for the blocks.
-    from .cachectl import checkpoint_lazy
+    # through checkpoint_lazy (round 17) so an open query scope frees the
+    # blocks and can watch them for the skew report.
+    from .cachectl import checkpoint_lazy, skew_guard_report
 
-    routed = checkpoint_lazy(routed, caches)
+    routed = checkpoint_lazy(routed)
     sizes = routed.groupBy("_cell").agg(F.count(F.lit(1)).alias("_csz"))
-    if eager_diagnostics:
-        dropped = sizes.filter(F.col("_csz") > max_cell_size).agg(
-            F.count(F.lit(1)).alias("cells"), F.sum("_csz").alias("rows")
-        ).collect()[0]
-        if dropped["cells"]:
-            # cheap (aggregate over the persisted routing, #cells rows) and
-            # loud: these rows are excluded from dedup entirely
-            logging.getLogger(__name__).warning(
-                "semantic_dedup_pairs: skew guard dropped %d cell(s) / %d row(s) "
-                "over max_cell_size=%d — raise num_cells (have %d) to recover recall",
-                dropped["cells"], dropped["rows"], max_cell_size, num_cells,
-            )
-    else:
-        # Lazy report (round 17, VERDICT r16 #8): recall loss still
-        # surfaces, but off the query path — an async micro-job over the
-        # materialized routing checkpoint, fired by the caller's own
-        # action (see diagnostics.py for why NOT a query observation).
-        from .diagnostics import async_skew_report, skew_guard_report
-
-        async_skew_report(
-            routed,
-            sizes.filter(F.col("_csz") > max_cell_size).agg(
-                F.count(F.lit(1)), F.coalesce(F.sum("_csz"), F.lit(0))
-            ),
-            skew_guard_report(
-                "semantic_dedup_pairs",
-                "skew guard dropped %d cell(s) / %d row(s) over "
-                f"max_cell_size={max_cell_size} — raise num_cells "
-                f"(have {num_cells}) to recover recall",
-            ),
-        )
+    skew_guard_report(
+        routed,
+        sizes.filter(F.col("_csz") > max_cell_size),
+        "_csz",
+        "semantic_dedup_pairs",
+        "skew guard dropped %d cell(s) / %d row(s) over "
+        f"max_cell_size={max_cell_size} — raise num_cells "
+        f"(have {num_cells}) to recover recall",
+    )
     routed = routed.join(
         F.broadcast(sizes.filter(F.col("_csz").between(2, max_cell_size))), "_cell"
     )
@@ -1132,7 +1132,6 @@ def margin_mining(
     threshold: float = 1.05,
     dim: int | None = None,
     topk=None,
-    caches=None,
 ) -> DataFrame:
     """Margin-based parallel-corpus mining (Artetxe & Schwenk 2019,
     "Margin-based Parallel Corpus Mining with Multilingual Sentence
@@ -1174,8 +1173,8 @@ def margin_mining(
     candidate branch, so both are persisted (bounded at n·k rows) —
     without the cache the dominant scoring join would run twice per
     direction. Caller owns the caches: the returned pair lineage pins
-    them; pass ``caches=CacheRegistry()`` (see :mod:`.cachectl`) to
-    release exactly these two pins when done."""
+    them, and an open query scope (:class:`.cachectl.CacheRegistry`)
+    releases exactly these two pins when it exits."""
     from .cachectl import pin
 
     if topk is None:
@@ -1184,8 +1183,8 @@ def margin_mining(
                 cand, qry, embedding_col, id_col, k=k, exclude_self=False, dim=dim
             )
 
-    fwd = pin(topk(side_b, side_a), caches)
-    bwd = pin(topk(side_a, side_b), caches)
+    fwd = pin(topk(side_b, side_a))
+    bwd = pin(topk(side_a, side_b))
 
     def _avg(topk: DataFrame, out: str) -> DataFrame:
         return (

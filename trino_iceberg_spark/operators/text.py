@@ -198,7 +198,7 @@ def ngram_counts(df: DataFrame, text_col: str, n: int = 2) -> DataFrame:
     )
 
 
-def tfidf(df: DataFrame, text_col: str, id_col: str, caches=None) -> DataFrame:
+def tfidf(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Per-document TF-IDF term weights: ``(id, token, tf, df, tfidf)``.
 
     Classic weighting ``tf * ln(N / df)``. Two token-keyed shuffles total:
@@ -217,7 +217,7 @@ def tfidf(df: DataFrame, text_col: str, id_col: str, caches=None) -> DataFrame:
     once and shares the RDD by identity — the same posting-table
     materialization any production tf-idf job writes out. The trade
     (lineage recovery of that intermediate) matches the dedup operators'
-    round-16 convention; pass ``caches=`` for an exact-release handle
+    round-16 convention; an open query scope frees the blocks
     (:func:`..operators.cachectl.checkpoint_lazy`).
     """
     from .cachectl import checkpoint_lazy
@@ -225,9 +225,7 @@ def tfidf(df: DataFrame, text_col: str, id_col: str, caches=None) -> DataFrame:
     toks = df.select(
         F.col(id_col), F.explode(word_tokens_col(F.lower(F.col(text_col)))).alias("token")
     )
-    tf = checkpoint_lazy(
-        toks.groupBy(id_col, "token").agg(F.count(F.lit(1)).alias("tf")), caches
-    )
+    tf = checkpoint_lazy(toks.groupBy(id_col, "token").agg(F.count(F.lit(1)).alias("tf")))
     dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     n = df.select(F.count(F.lit(1)).alias("_n"))
     return (
@@ -596,7 +594,7 @@ def token_entropy(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 
 def ngram_novelty(
-    df: DataFrame, text_col: str, id_col: str, n: int = 3, caches=None
+    df: DataFrame, text_col: str, id_col: str, n: int = 3
 ) -> DataFrame:
     """Per-document n-gram novelty attribution: the share of a document's
     distinct word n-grams that the document is the FIRST to introduce
@@ -627,8 +625,8 @@ def ngram_novelty(
     shared-inverted-index contract as
     :func:`~..operators.dedup.ngram_jaccard_pairs`) — without the cache
     the corpus would be scanned and shingled twice. Caller owns the
-    cache: pass ``caches=CacheRegistry()`` (see
-    :mod:`~..operators.cachectl`) to release exactly this pin."""
+    cache: an open query scope (:mod:`~..operators.cachectl`) releases
+    exactly this pin."""
     from .dedup import shingle
     from .cachectl import pin
 
@@ -636,8 +634,7 @@ def ngram_novelty(
         df.select(
             F.col(id_col).alias("_nv_id"),
             F.explode(shingle(text_col, n)).alias("_gram"),
-        ),
-        caches,
+        )
     )
     first = grams.groupBy("_gram").agg(F.min("_nv_id").alias("_first_owner"))
     return (

@@ -494,8 +494,9 @@ def dd11_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cell count PINNED to the oracle's 16 (ss09's convention): the oracle
     CTE hard-codes 16 cells, so deriving it from a ``count()`` job here
     both paid one extra full pass per run and would diverge from the
-    oracle past 160k vectors; ``eager_diagnostics=False`` keeps the skew
-    guard's filter but drops its up-front report jobs (round 16).
+    oracle past 160k vectors. The skew guard's filter runs no job at
+    build time; its dropped-cell report is logged only when a caller's
+    query scope exits (operators.cachectl).
     ``centroid_source`` hands the centroid top-k collect the raw scan so
     it skips the spread repartition built for routing parallelism
     (round 17 — centroid choice is partitioning-independent)."""
@@ -503,7 +504,6 @@ def dd11_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         S.semantic_dedup_pairs(
             e, "embedding", "vec_id", threshold=0.35, num_cells=16,
-            eager_diagnostics=False,
             centroid_source=load_table(spark, sf_dir, "embeddings"),
         )
         .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
@@ -557,8 +557,7 @@ def dd04_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     one carries a real oracle for the whole shingle pipeline."""
     d = load_table(spark, sf_dir, "documents")
     pairs = D.ngram_jaccard_pairs(
-        d, "text", "doc_id", k=3, threshold=0.3, block_col=F.col("lang"),
-        eager_diagnostics=False,
+        d, "text", "doc_id", k=3, threshold=0.3, block_col=F.col("lang")
     )
     return pairs.select(
         "id_a", "id_b", F.col("jaccard").cast("double").alias("jaccard")
@@ -690,8 +689,7 @@ def dd07_duplicate_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents", spread=True)
     pairs = D.ngram_jaccard_pairs(
-        d, "text", "doc_id", k=3, threshold=0.3, block_col=F.col("lang"),
-        eager_diagnostics=False,
+        d, "text", "doc_id", k=3, threshold=0.3, block_col=F.col("lang")
     )
     # The pair graph at any SF is tiny next to the corpus; 8-way rounds
     # keep per-round job overhead flat even under an untuned 200-partition
@@ -719,8 +717,7 @@ def dd08_near_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     pairs = D.ngram_jaccard_pairs(
-        d, "text", "doc_id", k=3, threshold=0.3, block_col=F.col("lang"),
-        eager_diagnostics=False,
+        d, "text", "doc_id", k=3, threshold=0.3, block_col=F.col("lang")
     )
     return near_dedup_survivors(
         d.select("doc_id", "lang"), pairs, "doc_id", shuffle_partitions=8
